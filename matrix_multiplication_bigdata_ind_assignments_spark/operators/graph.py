@@ -183,8 +183,10 @@ def pagerank(
     # rank vector replaces a per-iteration walk⋈deg join (and its
     # broadcast round) with a column — and makes the directed dangling
     # mass a WHERE outdeg IS NULL agg instead of an anti-join (r8: A/B'd
-    # ~25% off the 10-iteration wall, bit-identical ranks).  deg itself
-    # rides walk's src-clustering: no exchange to compute.
+    # ~25% off the 10-iteration wall, bit-identical ranks).  In the
+    # copartition arm deg rides walk's src-clustering (no exchange); the
+    # broadcast arm clusters walk on dst, so deg pays one exchange there,
+    # once, outside the loop.
     deg = walk.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
     statics = nodes.join(deg, nodes.node == deg.src, "left").select("node", "outdeg")
     # r13, BROADCAST arm only: persist-clustered statics — persist keeps

@@ -12,8 +12,11 @@ knobs (SURVEY.md §7 design stance):
 
 - ``join``       : shuffle hash/sort-merge join on the inner dimension +
                    partial/final hash aggregation.  The all-purpose path.
-- ``broadcast``  : same plan with the right side broadcast — the Spark
-                   native form of Stage 3's "pickle B to every worker".
+- ``broadcast``  : B broadcast to every task, A hash-partitioned on its
+                   rows — the Spark-native form of Stage 3's row panels
+                   with "pickle B to every worker".  The broadcast join
+                   keeps A's row partitioning, so each task owns whole
+                   rows of C and no partial sum crosses the shuffle.
 - ``blocked``    : block-id repartitioning + per-block-pair numpy GEMM in a
                    cogrouped ``applyInPandas`` — the scale path for dense×
                    dense (shuffle volume O(n²·n/BS) instead of O(n³) rows,
@@ -34,7 +37,12 @@ At 100 TB the COO join strategy shuffles |A| + |B| rows keyed on the inner
 dimension and |A·B| partial products into the aggregation; the blocked
 strategy instead shuffles each block O(n/BS) times with dense Arrow
 payloads, which is the plan you want for big dense operands.  Sparse
-operands keep the join strategy (only nnz rows flow).
+operands keep the join strategy (only nnz rows flow).  The broadcast
+strategy's invariant is row panels: its one exchange moves nnz(A) rows
+keyed on i, and the aggregate above the join needs none.  That exchange
+is its one cost — it is paid even when B is hypersparse and few partials
+would have flowed.  Its caveat is skew: a dense row i lands in one task,
+as in Stage 3's static row split.
 """
 
 from __future__ import annotations
@@ -179,9 +187,18 @@ def multiply(
         _, n_b = _coo_stats(B)
         block_size = choose_block_size(max(n_a, n_b))
     if strategy in ("join", "broadcast"):
-        right = F.broadcast(B) if strategy == "broadcast" else B
+        left, right = A, B
+        if strategy == "broadcast":
+            # Row panels: a broadcast hash join keeps the stream side's
+            # partitioning, and HashPartitioning(a.i) already satisfies the
+            # aggregate's clustering on (a.i, b.j) — so every partial sum
+            # for a cell of C stays inside the task that made it.  The
+            # count must be explicit: a column-only repartition is AQE-
+            # coalescable and collapsed n=2048 into ONE partition.
+            n = int(A.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+            left, right = A.repartition(n, "i"), F.broadcast(B)
         return (
-            A.alias("a")
+            left.alias("a")
             .join(right.alias("b"), F.col("a.j") == F.col("b.i"))
             .groupBy(F.col("a.i").alias("i"), F.col("b.j").alias("j"))
             .agg(F.round(F.sum(F.col("a.v") * F.col("b.v")), 6).alias("v"))
@@ -502,8 +519,9 @@ def q_matmul_dense(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("q_matmul_broadcast", oracle=_ORACLE_MATMUL_DENSE)
 def q_matmul_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same product via broadcast of B — Spark-native form of Stage 3's
-    manual B-broadcast (`Stage 3/Python Implementation/mm_opt_par.py:33-38`)."""
+    """Same product via row panels of A against a broadcast B — Spark-native
+    form of Stage 3's row split with a manual B-broadcast
+    (`Stage 3/Python Implementation/mm_opt_par.py:12-41`)."""
     return multiply(mat_A(spark, sf_dir), mat_B(spark, sf_dir), strategy="broadcast")
 
 

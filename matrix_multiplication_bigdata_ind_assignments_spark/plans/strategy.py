@@ -45,8 +45,9 @@ def choose_multiply_strategy(
     """Pick a physical strategy for C = A·B.
 
     - Small right operand AND modest partial-product volume →
-      ``broadcast`` (Stage 3's manual B-broadcast, done the Spark way:
-      no shuffle of the big side).  A small-but-dense right side can
+      ``broadcast`` (Stage 3's row panels with a manual B-broadcast, done
+      the Spark way: the big side is shuffled once, on its rows, and no
+      partial sum crosses the network).  A small-but-dense right side can
       still explode the join's partial-product count — the r6 planner
       gates broadcast on BOTH stats (measured: n=2048 at 559k nnz per
       side is 152M partials, broadcast 10.0s vs blocked 1.8s).
@@ -68,9 +69,10 @@ def choose_multiply_strategy(
         return "blocked"
     # Partials-heavy but too sparse/small for the blocked kernel: broadcast
     # (if the right side fits) still strictly dominates the plain shuffle
-    # join — both pay the identical partial-product hash-agg volume, but
-    # the join additionally shuffles the whole fact side.  The partials
-    # gate only demotes broadcast when the blocked branch actually fires.
+    # join — its partial sums are aggregated inside the row-panel task
+    # that made them and never cross the shuffle, while the join shuffles
+    # both operands AND the partial-product agg volume.  The partials gate
+    # only demotes broadcast when the blocked branch actually fires.
     if right_nnz <= BROADCAST_NNZ_LIMIT:
         return "broadcast"
     return "join"

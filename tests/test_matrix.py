@@ -33,6 +33,27 @@ def test_strategies_agree(A, B):
     assert dense == rows_set(M.multiply(A, B, strategy="blocked", block_size=17))
 
 
+@pytest.mark.parametrize("parts", [1, 4, 8])
+def test_broadcast_invariant_to_shuffle_partitions(spark, A, B, parts, monkeypatch):
+    """The row-panel broadcast arm sizes its panels from the session's
+    shuffle partition count; the product must not depend on it.  The
+    operator only reads the conf — setting it is the caller's business."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(parts))
+    try:
+        with monkeypatch.context() as m:
+            m.setattr(RuntimeConfig, "set", lambda *a: pytest.fail("operator set a conf"))
+            bc = M.multiply(A, B, strategy="broadcast")
+            got = rows_set(bc)
+            assert bc.rdd.getNumPartitions() == parts
+        assert got == rows_set(M.multiply(A, B, strategy="join"))
+    finally:
+        spark.conf.set(key, old)
+
+
 def test_blockmatrix_strategy_removed(A, B):
     """The per-row Python→JVM MatrixEntry bridge is not an exposed strategy."""
     import pytest

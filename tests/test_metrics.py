@@ -68,11 +68,10 @@ _ENVELOPES = {
 # bench.py does — same plan, sf0.001-sized data)
 _MATMUL_ENVELOPES = {
     "matmul_join_n256": 1_764_409,
-    # identical bytes to the join form at this scale: AQE broadcasts the
-    # tiny side either way, so both plans' exchanges reduce to the same
-    # partial-product aggregation — the envelope still pins that shared
-    # agg volume
-    "matmul_broadcast_n256": 1_764_409,
+    # row panels: the only exchange is A's nnz rows hash-partitioned on
+    # i; partial sums stay in their task, so no partial-product bytes
+    # cross the shuffle (12.7× below the join form's agg volume)
+    "matmul_broadcast_n256": 138_622,
     "spmm_sparse_n2048_d05": 53_643,
     "matmul_blocked_n4096_3d": 589_686,
 }
@@ -186,3 +185,27 @@ def test_snapshot_monotone_and_delta_clamped(spark):
     win = shuffle_snapshot(spark, since_stage_id=s0["max_stage_id"])
     assert win["shuffle_write_bytes"] == d["shuffle_write_bytes"]
     assert win["max_stage_id"] == s1["max_stage_id"]
+
+
+def test_explain_tool_rejects_sessions_without_jvm(spark):
+    """tools/explain_queries.py reads job groups through the JVM context;
+    a session without one (Spark Connect, or a stopped context) must end
+    in a clear SystemExit, not an AttributeError mid-run."""
+    import importlib.util
+    import os
+    from types import SimpleNamespace
+
+    path = os.path.join(os.path.dirname(os.path.dirname(__file__)), "tools", "explain_queries.py")
+    spec = importlib.util.spec_from_file_location("explain_queries", path)
+    tool = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(tool)
+
+    class ConnectLike:
+        @property
+        def sparkContext(self):
+            raise NotImplementedError("sparkContext() is not implemented")
+
+    for session in (ConnectLike(), SimpleNamespace(sparkContext=SimpleNamespace(_jsc=None))):
+        with pytest.raises(SystemExit, match="classic"):
+            tool.classic_context(session)
+    assert tool.classic_context(spark) is spark.sparkContext

@@ -5,6 +5,8 @@ aggregations keep their partial/final split.  These are the properties
 that decide whether a plan survives a 1000× scale-up — asserted so a
 refactor can't silently regress them."""
 
+import re
+
 import pytest
 
 import __spark_entry__ as entry_mod
@@ -93,10 +95,23 @@ def test_matmul_has_partial_final_agg(spark, sf_dir, qs):
 
 
 def test_broadcast_strategy_broadcasts(spark, sf_dir):
+    """Row panels: A crosses the network once, hash-partitioned on i at an
+    explicit count, and the broadcast join keeps that partitioning — so
+    the aggregate above it needs no exchange and partial sums never leave
+    their task.  The explicit count (REPARTITION_BY_NUM) is what stops AQE
+    from coalescing the panels into one partition."""
     A = M.mat_A(spark, sf_dir)
     B = M.mat_B(spark, sf_dir)
-    plan = plan_of(M.multiply(A, B, strategy="broadcast"))
+    df = M.multiply(A, B, strategy="broadcast")
+    plan = plan_of(df)
     assert "BroadcastHashJoin" in plan
+    shuffles = re.findall(r"(?<!Broadcast)Exchange (.*)", plan)
+    assert len(shuffles) == 1, plan
+    assert re.match(r"hashpartitioning\(i#\d+L, \d+\), REPARTITION_BY_NUM", shuffles[0]), plan
+    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert df.rdd.getNumPartitions() == n  # executed: AQE left the panels alone
+    # neither the initial nor the AQE-final plan adds a requirement exchange
+    assert "ENSURE_REQUIREMENTS" not in plan_of(df)
 
 
 def test_shuffled_hash_join_hint(spark, sf_dir):

@@ -21,6 +21,25 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
+def classic_context(spark):
+    """The session's SparkContext, or SystemExit with a clear message.
+
+    Job groups and formatted plans are read through the JVM, which only a
+    classic py4j session exposes: under Spark Connect there is no
+    client-side SparkContext (and a stopped one has ``_jsc`` None), so
+    stop up front instead of an AttributeError mid-run."""
+    try:
+        sc = spark.sparkContext
+    except Exception:  # Spark Connect: PySparkNotImplementedError
+        sc = None
+    if getattr(sc, "_jsc", None) is None:
+        raise SystemExit(
+            "explain_queries needs a classic (py4j) SparkSession with a live "
+            "JVM SparkContext; Spark Connect sessions are not supported"
+        )
+    return sc
+
+
 def main() -> int:
     args = sys.argv[1:]
     tag, suffix, sf_dir = "r12", "before", "/root/testdata/sf0.1"
@@ -55,13 +74,13 @@ def main() -> int:
             "spark.ui.retainedJobs": "40000",
         },
     )
-    spark.sparkContext.setLogLevel("ERROR")
+    sc = classic_context(spark)
+    sc.setLogLevel("ERROR")
     qs = registry.queries()
     outdir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
                           "plans", tag)
     os.makedirs(outdir, exist_ok=True)
 
-    sc = spark.sparkContext
     tracker = sc.statusTracker()
 
     for name in names:
