@@ -1072,12 +1072,16 @@ def _pq_train_codebook(
     r12: ``sample_rows`` reuses an already-collected (h, vec_id)-ordered
     sample from the SAME unit frame (its first _PQ_TRAIN rows are what
     this function's own collect would return — see _ivf_train_centroids);
-    ``n_rows`` skips the sample builder's count job when known."""
+    ``n_rows`` skips the sample builder's count job when known.  A
+    reused sample without ``n_rows`` costs one count job, so the prefix
+    guard below always runs."""
     import numpy as np
 
-    if sample_rows is not None and len(sample_rows) >= min(
-        _PQ_TRAIN, n_rows if n_rows is not None else len(sample_rows)
-    ):
+    if sample_rows is not None and n_rows is None:
+        # the prefix guard below needs the corpus count: one job, paid only
+        # on a cold codebook build that was handed a sample without it
+        n_rows = unit.count()
+    if sample_rows is not None and len(sample_rows) >= min(_PQ_TRAIN, n_rows):
         rows = sample_rows[:_PQ_TRAIN]
         # ADVICE r12: VERIFY the prefix-validity condition instead of
         # documenting it.  The reused prefix equals the standalone path's
@@ -1088,7 +1092,7 @@ def _pq_train_codebook(
         # scales — the filter keeps ~4×_PQ_TRAIN rows in expectation),
         # fall back to the standalone sample so _PQ_BOOKS content never
         # depends on which query trained first.
-        if n_rows is not None and n_rows > 4 * _PQ_TRAIN and len(rows) == _PQ_TRAIN:
+        if n_rows > 4 * _PQ_TRAIN and len(rows) == _PQ_TRAIN:
             frac = min(255, max(1, (4 * _PQ_TRAIN * 256) // n_rows))
             if rows[-1]["h"] >= f"{frac:02x}":
                 rows = _pq_train_sample(unit, n_rows=n_rows)

@@ -222,3 +222,28 @@ def test_pq_codebook_sample_prefix_guard(monkeypatch):
     # rows — the guard must retrain from the standalone sample.
     S._pq_train_codebook(None, sample_rows=mk("ff"), n_rows=100_000)
     assert calls == [100_000]
+
+
+def test_pq_codebook_prefix_guard_counts_when_n_rows_unknown(monkeypatch):
+    """A reused sample handed over without the corpus count must still
+    pass the prefix guard: the codebook counts the corpus (one job) and
+    retrains when the tail hash would not survive the standalone filter,
+    instead of trusting the prefix unchecked."""
+    row = {"u": [((j * 7) % 97) / 97.0 for j in range(64)]}
+    calls = []
+
+    class Unit:
+        def count(self):
+            calls.append("count")
+            return 100_000
+
+    def fake_standalone(unit, n_sample=S._PQ_TRAIN, n_rows=None):
+        calls.append(n_rows)
+        return [dict(row, h="00")] * S._PQ_TRAIN
+
+    monkeypatch.setattr(S, "_pq_train_sample", fake_standalone)
+    S._pq_train_codebook(Unit(), sample_rows=[dict(row, h="00")] * S._PQ_TRAIN)
+    assert calls == ["count"]  # prefix valid: counted, reused
+    calls.clear()
+    S._pq_train_codebook(Unit(), sample_rows=[dict(row, h="ff")] * S._PQ_TRAIN)
+    assert calls == ["count", 100_000]  # counted, then retrained standalone

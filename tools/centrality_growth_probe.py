@@ -5,13 +5,13 @@ arms over the DIRECTED trade graph (src=supplier, dst=customer):
 - ``disjoint 10x``: 10 node-shifted copies — |V|, |E| and the landmark
   set all grow 10x with per-component structure unchanged.  HITS
   exchanges O(|V|) score vectors per round → ~10x shuffle; closeness
-  pair state is per-component (landmarks only reach their own copy) →
-  ~10x pairs, ~10x shuffle.
+  level-set state is per-component (landmarks only reach their own
+  copy) → ~10x state words, ~10x shuffle.
 - ``dense 10x``: 10 shifted edge overlays on the SAME node set — |V|
   and landmarks fixed, |E| ~10x.  HITS per-round exchange stays
   O(|V|) (the whole point: edges never move); closeness frontiers
-  touch more edges per round but the settled pair table is bounded by
-  |V|·|L| regardless of density.
+  touch more edges per round but the state is bounded by |V|·⌈|L|/64⌉
+  words regardless of density.
 
 Usage: python tools/centrality_growth_probe.py [sf_dir]
 """
@@ -35,7 +35,7 @@ def main() -> int:
     )
     from matrix_multiplication_bigdata_ind_assignments_spark.operators import graph as G
     from matrix_multiplication_bigdata_ind_assignments_spark.operators.closeness import (
-        landmark_distances,
+        landmark_harmonic,
     )
     from matrix_multiplication_bigdata_ind_assignments_spark.operators.hits import hits
     from matrix_multiplication_bigdata_ind_assignments_spark.session import get_spark
@@ -94,13 +94,12 @@ def main() -> int:
             lambda e: hits(spark, e).agg(F.round(F.sum("hub"), 3).alias("s")).first()[0],
         ),
         (
-            # the growth arms run the COPARTITION arm: the first probe run
-            # blew the broadcast build at disjoint-10x (the pair frontier
-            # peaks at |V|*|L| — exactly the hazard the docstring names),
-            # which is why the arm exists; base-1x broadcast numbers come
-            # from the registered query's own bench row
-            "q_closeness pair-BFS (copartition arm)",
-            lambda e: landmark_distances(e, join_strategy="copartition").count(),
+            # the growth arms run the COPARTITION arm: a broadcast
+            # frontier outgrows the build side at disjoint-10x, which is
+            # why the arm exists; base-1x broadcast numbers come from the
+            # registered query's own bench row
+            "harmonic level-set BFS (copartition arm)",
+            lambda e: landmark_harmonic(e, join_strategy="copartition").count(),
         ),
     ):
         print(f"\n### {op_label}")

@@ -274,10 +274,11 @@ AUDIT = {
     "join back as broadcasts; every reduction is a BIGINT micro-nat sum (map-side combinable); "
     "the probe joins stream vs model on (w1, w2) — broadcast at fixture scale, documented "
     "shuffle-join degradation at real model sizes",
-    "q_closeness_landmarks": "the bfs_hops delta/frontier discipline on (node, landmark) pair "
-    "state: every round's expansion joins the resident symmetric edge list against the BROADCAST "
-    "frontier only (never the settled table), first-reach anti-join per pair, per-round eager "
-    "checkpoints — the final frame explains as the harmonic agg over an ExistingRDD distance table",
+    "q_closeness_landmarks": "level-set BFS on 64-landmark bitmask words keyed (node, word): each "
+    "round joins the resident symmetric edge list against the BROADCAST frontier words, bit_or-"
+    "aggregates them and merges the result into the state in one full-outer join that also adds "
+    "the exact harmonic numerator, then one local checkpoint — no per-pair table is ever built, so "
+    "the final frame explains as one sum-by-node over the ExistingRDD state",
     "q_rrf_fusion": "both retriever limbs keep the corpus resident: the dense limb is the "
     "q_cosine_topk shape (10-row query side under BroadcastExchange into the scored crossJoin), "
     "the sparse limb equi-joins corpus tokens against BROADCAST query tokens and set sizes join "
