@@ -47,7 +47,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..registry import register
-from .graph import _unroll_stability_check, trade_edges
+from .graph import _unroll_stability_check, symmetric, trade_edges
 
 _CL_ROUNDS = 6  # fixed unroll; the trade graph settles in <=3 (dense bipartite)
 _CL_SEED_MOD = 20  # landmarks = trusted suppliers (node % 20 == 0), ~10% of suppliers
@@ -101,9 +101,7 @@ def landmark_harmonic(
     lc = math.lcm(*range(1, rounds + 1))
     n_part = int(os.environ.get("MMBD_CC_SHUFFLE_PARTITIONS", "8"))
     ck = lambda df: df.localCheckpoint(eager=True)  # noqa: E731
-    sym = edges.select("src", "dst").unionAll(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
+    sym = symmetric(edges)
     if join_strategy == "copartition":
         sym = sym.repartition(n_part, "src").persist()
         sym.count()  # materialize the one-time clustering

@@ -60,8 +60,8 @@ def pagerank(
     differs between engines; rounding every round stops drift from
     compounding).
 
-    Robustness knobs (VERDICT r6 items 6; both OFF for the
-    oracle-checked fixed-iteration default):
+    Robustness knobs (both OFF for the oracle-checked fixed-iteration
+    default):
 
     - ``tol``: early-stop when max |Δrank| < tol (one extra small join
       per iteration, only when set).  Because every iterate is 12-dp
@@ -72,36 +72,33 @@ def pagerank(
       ``.checkpoint()`` (requires ``spark.sparkContext.setCheckpointDir``)
       instead of ``localCheckpoint`` — localCheckpoint pins blocks to
       executors, so on a real cluster an executor loss mid-iteration
-      kills the job (r6 verdict note); a reliable checkpoint cadence
+      kills the job; a reliable checkpoint cadence
       bounds recomputation to k iterations.  The knob covers EVERY
       non-recomputable frame the loop re-reads: the rank iterates AND
-      the static ``nodes``/``deg`` tables (the persisted edge list
+      the static (node, outdeg) vector (the persisted edge list
       keeps its lineage, so it recomputes on block loss without help).
       Local runs keep the (faster) localCheckpoint default.
 
-    ``join_strategy`` picks how the |V|-row frames (ranks, deg,
-    contribs) meet the persisted src-clustered edge list each iteration
-    (VERDICT r7 item 3 — the billion-node fallback as code, not a
-    comment):
+    ``join_strategy`` picks how the |V|-row frames (ranks, statics,
+    contribs) meet the persisted edge list each iteration:
 
-    - ``'broadcast'`` (default): rank-sized sides are broadcast — zero
+    - ``'broadcast'`` (default): the rank vector is broadcast — zero
       edge movement, zero rank shuffle; right whenever |V| rows fit an
-      executor (~every graph whose rank vector is ≪ executor memory).
-    - ``'copartition'``: plain shuffled joins.  The edge list was
+      executor.
+    - ``'copartition'``: shuffled joins.  The edge list is
       hash-partitioned on src ONCE (persisted — InMemoryTableScan keeps
-      outputPartitioning), and the loop pins
-      spark.sql.shuffle.partitions to the same partition count, so
-      EnsureRequirements re-uses the edges' clustering and exchanges
-      ONLY the |V|-row side per join: per-iteration shuffle is O(|V|),
-      independent of |E| (asserted by a byte envelope in
-      tests/test_graph.py; SCALING.md shows the measured bytes).  Right
-      when the rank vector itself is too big to broadcast — the
-      billion-node regime.
+      outputPartitioning), and the loop pins spark.sql.shuffle.partitions
+      to the same count, so EnsureRequirements re-uses the edges'
+      clustering and exchanges ONLY the |V|-row side per join:
+      per-iteration shuffle is O(|V|), independent of |E| (byte envelope
+      in tests/test_graph.py; SCALING.md).  Right when the rank vector
+      itself is too big to broadcast — the billion-node regime.
 
     Both arms compute identical 12-dp-rounded ranks (the per-iteration
     rounding already absorbs summation-order differences ACROSS ENGINES,
     a stronger condition than across join strategies; equality asserted
-    in tests/test_graph.py).
+    in tests/test_graph.py), whatever the session's shuffle partition
+    count.  The broadcast arm never writes session conf.
 
     Returns (node, rank)."""
     import os
@@ -112,103 +109,39 @@ def pagerank(
         raise ValueError(f"truncate_every must be >= 1, got {truncate_every}")
     if tol is not None:
         truncate_every = 1  # the per-iteration delta probe materializes anyway
+    n_part = int(os.environ.get("MMBD_CC_SHUFFLE_PARTITIONS", "8"))
     # 'copartition': identity instead of the broadcast hint — the rank
-    # sides are ExistingRDD scans with no stats (sizeInBytes defaults to
-    # the max), so the planner picks a shuffled join and EnsureRequirements
-    # finds the edges already hash-clustered on src at the loop's pinned
-    # partition count: only the |V|-row side moves.
+    # sides are ExistingRDD scans with no stats, so the planner picks a
+    # shuffled join and EnsureRequirements finds the walk already
+    # hash-clustered on src at the pinned partition count: only the
+    # |V|-row side moves.
     bc = F.broadcast if join_strategy == "broadcast" else (lambda df: df)
-    n_part = os.environ.get("MMBD_CC_SHUFFLE_PARTITIONS", "8")
-    # The edge list is the BIG side of every iteration's join and its key
-    # never changes — hash-partition it on src ONCE and persist().  The
-    # persist matters twice over: it pins the blocks AND (unlike
-    # localCheckpoint, whose LogicalRDD forgets outputPartitioning — the
-    # r6 form re-exchanged the full edge list via SortMergeJoin every
-    # round, measured 150 MB/10-iteration query at sf0.1) it keeps the
-    # repartition node in the plan, so each iteration's join sees the
-    # edges already clustered on src and exchanges ONLY the |V|-row
-    # rank/deg/contrib sides — ~3 MB for the same query, 50× less.
-    # That is the Pregel property that matters when edges are 10⁶× the
-    # rank vector at 100 TB: static edges stay put, only ranks move.
-    # (Explicitly unpersisted after the loop; the returned frame is an
-    # eager checkpoint with no lineage into walk.)
-    def materialize(df: DataFrame) -> DataFrame:
-        """Static loop inputs (nodes, deg): reliable checkpoint when the
-        fault-tolerance knob is on — a localCheckpoint'ed frame re-read
-        by every iteration is exactly the block an executor loss makes
-        unrecoverable — else the (faster) local form."""
-        if checkpoint_every:
-            return df.checkpoint(eager=True)
-        return df.localCheckpoint(eager=True)
 
-    # r12 (guide §2.4): repartition FIRST, then dedup — the distinct's
-    # ClusteredDistribution(src, dst) is satisfied by hashing on either
-    # single endpoint, so it rides the clustering exchange the loop needs
-    # anyway instead of paying its own (2 exchanges → 1 in the walk
-    # build; set-identical output, and the persisted partitioning the
-    # iterations rely on is preserved through the aggregate).
-    #
-    # r13 clustering KEY per arm: the broadcast arm's only per-iteration
-    # aggregate is the contribution sum groupBy(dst) — clustering the
-    # resident walk on ``dst`` lets it ride the one-time exchange (the
-    # hits.py half-round move), making the whole iteration exchange-free;
-    # the rank side is broadcast, so src-clustering bought that arm
-    # nothing.  The copartition arm keeps ``src``: there the rank vector
-    # is SHUFFLED to meet the walk each iteration (walk.src == ranks.node)
-    # and src-clustering is what keeps the |E| side unmoved.
+    # Broadcast arm: the only per-iteration aggregate is groupBy(dst), so
+    # the walk is clustered on dst and the whole iteration is
+    # exchange-free.  Copartition arm: the rank vector is shuffled to meet
+    # the walk on src, so src-clustering keeps the |E| side unmoved.
     walk_key = "dst" if join_strategy == "broadcast" else "src"
-    if directed:
-        walk = (
-            edges.select("src", "dst")
-            .repartition(int(n_part), walk_key)
-            .distinct()
-            .persist()
-        )
-        nodes = materialize(
-            walk.select(F.col("src").alias("node"))
-            .unionByName(walk.select(F.col("dst").alias("node")))
-            .distinct()
-        )
-    else:
-        walk = (
-            edges.select("src", "dst")
-            .unionByName(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-            .repartition(int(n_part), walk_key)
-            .distinct()
-            .persist()
-        )
-        nodes = materialize(walk.select(F.col("src").alias("node")).distinct())
-    # Fold out-degree INTO the node state once: every iteration needs
-    # (rank, outdeg) keyed on the same node id, so carrying outdeg in the
-    # rank vector replaces a per-iteration walk⋈deg join (and its
-    # broadcast round) with a column — and makes the directed dangling
-    # mass a WHERE outdeg IS NULL agg instead of an anti-join (r8: A/B'd
-    # ~25% off the 10-iteration wall, bit-identical ranks).  In the
-    # copartition arm deg rides walk's src-clustering (no exchange); the
-    # broadcast arm clusters walk on dst, so deg pays one exchange there,
-    # once, outside the loop.
-    deg = walk.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    statics = nodes.join(deg, nodes.node == deg.src, "left").select("node", "outdeg")
-    # r13, BROADCAST arm only: persist-clustered statics — persist keeps
-    # outputPartitioning (localCheckpoint forgot it), and that arm's
-    # iteration has NO exchange anywhere (contribs rides the dst-clustered
-    # walk), so the statics ⋈ contribs merge join sees both sides already
-    # hash-partitioned at n_part and needs NO exchange and NO broadcast
-    # build.  The COPARTITION arm measured WORSE with a clustered statics
-    # (3,568 → 8,650 B/iter at sf0.001): its contribs aggregate pays a
-    # real exchange, AQE coalesces that stage below n_part partitions, and
-    # the cached 8-partition statics then mismatches — AQE re-exchanges a
-    # side per iteration.  That arm keeps the r12 shape (checkpointed
-    # statics, both join sides planned as AQE shuffle stages that coalesce
-    # together).  The reliable-checkpoint knob also keeps the r12 shape —
-    # a checkpoint is the fault-tolerance contract.
+    walk, statics = pagerank_walk(edges, n_part, walk_key, directed)
+    # Broadcast arm: persist keeps statics' hash(node, n_part) clustering,
+    # and contribs arrives hash(dst, n_part) riding the walk, so the
+    # merge-hinted statics ⋈ contribs is co-partitioned — no exchange, no
+    # broadcast build.  Copartition arm (measured negative for a clustered
+    # statics, 3,568 → 8,650 B/iter at sf0.001): its contribs aggregate
+    # pays a real exchange that AQE coalesces below n_part, so a clustered
+    # statics mismatches and AQE re-exchanges a side per iteration; a
+    # checkpointed statics lets both join sides coalesce together.  The
+    # reliable-checkpoint knob checkpoints reliably: a localCheckpoint'ed
+    # frame re-read by every iteration is exactly the block an executor
+    # loss makes unrecoverable.
     statics_clustered = join_strategy == "broadcast" and not checkpoint_every
     if statics_clustered:
-        statics = statics.repartition(int(n_part), "node").persist()
+        statics = statics.persist()
+    elif checkpoint_every:
+        statics = statics.checkpoint(eager=True)
     else:
-        statics = materialize(statics)
-    n_nodes = statics.count()  # one O(|V|) stat job (also materializes the
-    # persisted statics); the teleport term needs the scalar
+        statics = statics.localCheckpoint(eager=True)
+    n_nodes = statics.count()  # the teleport term needs the scalar
 
     def truncate(df: DataFrame, it: int) -> DataFrame:
         """Lineage truncation, every ``truncate_every``-th iteration (the
@@ -227,19 +160,26 @@ def pagerank(
             return df.checkpoint(eager=True)
         return df.localCheckpoint(eager=True)
 
-    old_part = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", n_part)
+    # Copartition arm only: its per-iteration exchanges (the rank side and
+    # the contribution aggregate) are planned by EnsureRequirements at the
+    # session partition count, so the loop pins that count to n_part.  An
+    # explicit rank-side repartition instead (the closeness move) measured
+    # 22,396 vs 3,568 B/iter at sf0.001 under 32 session partitions: the
+    # contribution aggregate still writes one block per session partition,
+    # and the hint that keeps the walk resident stops AQE from broadcasting
+    # a small walk.  The broadcast arm's loop has no exchange and needs no
+    # pin.
+    pin = join_strategy == "copartition"
+    if pin:
+        old_part = spark.conf.get("spark.sql.shuffle.partitions")
+        spark.conf.set("spark.sql.shuffle.partitions", str(n_part))
     try:
         ranks = statics.withColumn("rank", F.lit(1.0 / n_nodes))
         for it in range(iters):
-            # The rank state (node, outdeg, rank) is a |V|-row frame —
-            # broadcast by default (its ExistingRDD scan carries no
-            # stats, so the planner would SMJ, re-sorting the 70×-bigger
-            # edge list every round: measured 31 MB shuffle / ~7 s vs
-            # 3 MB / ~2.5 s broadcast at sf0.1).
-            # join_strategy='copartition' is the billion-node arm: the
-            # persisted walk keeps its src clustering, so the shuffled
-            # join moves only the |V|-row side.
+            # The rank state (node, outdeg, rank) is a |V|-row frame; its
+            # ExistingRDD scan carries no stats, so unhinted the planner
+            # would SMJ and re-sort the edge list every round (measured
+            # 31 MB shuffle / ~7 s vs 3 MB / ~2.5 s broadcast at sf0.1).
             contribs = (
                 walk.join(bc(ranks), walk.src == ranks.node)
                 .groupBy("dst")
@@ -247,12 +187,6 @@ def pagerank(
             )
             base = F.lit((1.0 - damping) / n_nodes)
             if statics_clustered:
-                # r13 broadcast arm: merge-hinted instead of broadcast —
-                # statics is persisted hash(node, n_part) and contribs
-                # arrives hash(dst, n_part) riding the dst-clustered walk,
-                # so the SMJ is co-partitioned: no exchange, and one
-                # broadcast-build wave per iteration gone (the r12-profiled
-                # driver gap).
                 joined = statics.join(
                     contribs.hint("merge"), statics.node == contribs.dst, "left"
                 )
@@ -296,11 +230,76 @@ def pagerank(
             else:
                 ranks = new_ranks
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_part)
+        if pin:
+            spark.conf.set("spark.sql.shuffle.partitions", old_part)
         walk.unpersist()  # ranks is an eager checkpoint — no lineage into walk
         if statics_clustered:
             statics.unpersist()
     return ranks.select("node", "rank")  # outdeg is loop-internal state
+
+
+def symmetric(df: DataFrame, *carry: str) -> DataFrame:
+    """``(src, dst, *carry)`` in both directions from ONE pass over ``df``:
+    each row becomes its forward and reversed copy through one inline
+    generator, so ``df``'s lineage — and any exchange under it — is read
+    once (a ``union`` of two projections scans it twice, the second time
+    as a ReusedExchange).  Duplicates are kept: an input holding both
+    (a, b) and (b, a) yields each direction twice."""
+    cols = [F.col(c) for c in carry]
+    return df.select(
+        F.inline(
+            F.array(
+                F.struct(F.col("src"), F.col("dst"), *cols),
+                F.struct(F.col("dst").alias("src"), F.col("src").alias("dst"), *cols),
+            )
+        )
+    )
+
+
+def pagerank_walk(
+    edges: DataFrame, n_part: int, walk_key: str, directed: bool = False
+) -> tuple[DataFrame, DataFrame]:
+    """The power method's static inputs: ``walk`` — the distinct
+    ``(src, dst)`` steps (both directions unless ``directed``),
+    hash-clustered on ``walk_key`` at ``n_part`` partitions and persisted
+    — and ``statics`` — the unmaterialized ``(node, outdeg)`` vector, one
+    row per node, outdeg NULL for a node with no out-edges.
+
+    The walk is persisted, not checkpointed: persist keeps the
+    repartition's outputPartitioning, which every iteration's join and
+    aggregate rely on to leave the |E| side in place (a localCheckpoint
+    forgets it, and the loop re-exchanged the full edge list every round:
+    150 MB per 10-iteration query at sf0.1).  The distinct's
+    ClusteredDistribution(src, dst) is satisfied by hashing on either
+    endpoint, so it rides the one clustering exchange.
+
+    A symmetric walk has outdeg(v) = indeg(v) and its node set is the set
+    of ``walk_key`` values, so statics is one count aggregate over that
+    clustering: no exchange, and its output is already hash(node,
+    n_part).  (Planned before the walk's cache exists, the aggregate
+    carries an exchange that AQE drops once the cache stage reports its
+    partitioning.)  A directed walk counts (src, 1), (dst, 0) endpoint
+    rows per node in one aggregate over a repartition to the same
+    hash(node, n_part): its 2|E| endpoint rows cross that one exchange
+    uncombined, once, in place of the nodes distinct, its checkpoint and
+    the outdeg join."""
+    walk = edges.select("src", "dst")
+    if not directed:
+        walk = symmetric(walk)
+    walk = walk.repartition(n_part, walk_key).distinct().persist()
+    if not directed:
+        statics = walk.groupBy(walk_key).agg(F.count(F.lit(1)).alias("outdeg"))
+        return walk, statics.select(F.col(walk_key).alias("node"), "outdeg")
+    ends = walk.select(
+        F.inline(
+            F.array(
+                F.struct(F.col("src").alias("node"), F.lit(1).alias("out")),
+                F.struct(F.col("dst").alias("node"), F.lit(0).alias("out")),
+            )
+        )
+    )
+    statics = ends.repartition(n_part, "node").groupBy("node").agg(F.sum("out").alias("outdeg"))
+    return walk, statics.select("node", F.when(F.col("outdeg") > 0, F.col("outdeg")).alias("outdeg"))
 
 
 def _sql_pagerank(damping: float = _PR_DAMPING, iters: int = _PR_ITERS) -> str:
@@ -1210,9 +1209,7 @@ def bfs_hops(
 
     n_part = int(os.environ.get("MMBD_CC_SHUFFLE_PARTITIONS", "8"))
     ck = (lambda df: df.localCheckpoint(eager=True)) if truncate else (lambda df: df)
-    sym = edges.select("src", "dst").unionAll(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).repartition(n_part, "dst")
+    sym = symmetric(edges).repartition(n_part, "dst")
     if truncate:
         sym = sym.persist()
     dist = ck(seeds.select("node", F.lit(0).cast("long").alias("dist")))
@@ -1298,9 +1295,7 @@ def _certify_bfs_fixpoint(edges: DataFrame, dist: DataFrame) -> None:
     once; raise if anything improves.  Called by q_bfs_hops only on the
     uncertified path (loop exhausted its unroll without an observed
     empty frontier); tested directly on an under-iterated dist."""
-    sym = edges.unionAll(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
+    sym = symmetric(edges)
     relaxed = (
         sym.join(dist.withColumnRenamed("node", "src"), "src")
         .select(F.col("dst").alias("node"), (F.col("dist") + 1).alias("cand"))
@@ -1401,9 +1396,7 @@ def widest_path(edges_w: DataFrame, seeds: DataFrame, rounds: int = _WP_ROUNDS,
 
     n_part = int(os.environ.get("MMBD_CC_SHUFFLE_PARTITIONS", "8"))
     ck = (lambda df: df.localCheckpoint(eager=True)) if truncate else (lambda df: df)
-    sym = edges_w.select("src", "dst", "w").unionAll(
-        edges_w.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "w")
-    ).repartition(n_part, "dst")
+    sym = symmetric(edges_w, "w").repartition(n_part, "dst")
     if truncate:
         sym = sym.persist()
     cap = ck(seeds.select("node", F.lit(_WP_SEED_CAP).cast("long").alias("cap")))
@@ -1500,9 +1493,7 @@ FROM c{rounds}
 def _certify_widest_fixpoint(ew: DataFrame, cap: DataFrame) -> None:
     """Max-min twin of _certify_bfs_fixpoint (one full relaxation of the
     settled capacities; raise on any improvement)."""
-    sym = ew.unionAll(
-        ew.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "w")
-    )
+    sym = symmetric(ew, "w")
     relaxed = (
         sym.join(cap.withColumnRenamed("node", "src"), "src")
         .select(F.col("dst").alias("node"), F.least(F.col("cap"), F.col("w")).alias("cand"))
@@ -1695,9 +1686,7 @@ def shortest_path(edges_w: DataFrame, seeds: DataFrame, rounds: int = _SP_ROUNDS
 
     n_part = int(os.environ.get("MMBD_CC_SHUFFLE_PARTITIONS", "8"))
     ck = (lambda df: df.localCheckpoint(eager=True)) if truncate else (lambda df: df)
-    sym = edges_w.select("src", "dst", "cost").unionAll(
-        edges_w.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "cost")
-    ).repartition(n_part, "dst")
+    sym = symmetric(edges_w, "cost").repartition(n_part, "dst")
     if truncate:
         sym = sym.persist()
     dist = ck(seeds.select("node", F.lit(0).cast("long").alias("dist")))
@@ -1779,9 +1768,7 @@ FROM c{rounds}
 def _certify_shortest_fixpoint(ew: DataFrame, dist: DataFrame) -> None:
     """Min-plus twin of _certify_bfs_fixpoint (one full relaxation of
     the settled distances; raise on any improvement)."""
-    sym = ew.unionAll(
-        ew.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "cost")
-    )
+    sym = symmetric(ew, "cost")
     relaxed = (
         sym.join(dist.withColumnRenamed("node", "src"), "src")
         .select(F.col("dst").alias("node"), (F.col("dist") + F.col("cost")).alias("cand"))
@@ -2011,9 +1998,7 @@ def q_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     combinable moment agg — nothing after the first exchange scales
     with |E|."""
     edges = trade_edges(spark, sf_dir)
-    ed = edges.unionAll(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).localCheckpoint(eager=True)
+    ed = symmetric(edges).localCheckpoint(eager=True)
     # r13: materialize the |V|-row degree table ONCE — it feeds TWO
     # broadcast builds below, and an unmaterialized deg re-ran the full
     # 2|E| aggregate (scan + exchange) inside each build (the duplicated

@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register
-from .graph import _PR_DAMPING, _PR_ITERS, _decode_ranks, trade_edges
+from .graph import _PR_DAMPING, _PR_ITERS, _decode_ranks, pagerank_walk, trade_edges
 
 # Seed rule: trusted suppliers = suppkey ≡ 0 (mod 10) → node ids 2k with
 # k ≡ 0 (mod 10), i.e. node % 20 == 0.  Pure arithmetic so both engines
@@ -43,39 +43,21 @@ def personalized_pagerank(
     (every node with an edge has out-degree ≥ 1), so Σrank stays 1 and
     the oracle needs no dangling scalar.
 
-    Scale shape = q_pagerank's broadcast arm: the static edge list is
-    hash-clustered on src once and persisted; each round exchanges only
-    the |V|-row state (node, outdeg, sw, rank); lineage truncates every
-    ``truncate_every`` rounds; 12-dp rounding per round is the
-    determinism contract with the unrolled-CTE oracle."""
+    Scale shape = q_pagerank's broadcast arm, on the same static inputs
+    (``graph.pagerank_walk``): the symmetric walk is hash-clustered on
+    dst once and persisted, and statics — one count aggregate riding that
+    clustering — is persisted hash(node, n_part).  Each round broadcasts
+    the |V|-row state (node, outdeg, sw, rank), the contribution sum
+    rides the walk's clustering and the statics ⋈ contribs merge join is
+    co-partitioned, so the loop has no exchange and never touches session
+    conf; lineage truncates every ``truncate_every`` rounds; 12-dp
+    rounding per round is the determinism contract with the unrolled-CTE
+    oracle."""
     import os
 
-    n_part = os.environ.get("MMBD_CC_SHUFFLE_PARTITIONS", "8")
-    # r12: repartition BEFORE distinct — Hash(src) satisfies the dedup's
-    # clustering, so it rides the loop's one-time exchange instead of
-    # paying its own (set-identical; the graph.pagerank move).
-    # r13 (the graph.pagerank broadcast-arm move): the walk is clustered on
-    # ``dst`` — the only per-iteration aggregate is the contribution sum
-    # groupBy(dst), which now rides this one-time exchange (the rank side
-    # is broadcast, so src-clustering bought nothing); statics is
-    # persist-clustered on node so the per-iteration statics ⋈ contribs
-    # merge join is co-partitioned: zero per-iteration exchanges and one
-    # broadcast-build wave (ranks) per iteration.
-    walk = (
-        edges.select("src", "dst")
-        .unionByName(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .repartition(int(n_part), "dst")
-        .distinct()
-        .persist()
-    )
-    nodes = walk.select(F.col("src").alias("node")).distinct()
-    deg = walk.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    statics_cached = (
-        nodes.join(deg, nodes.node == deg.src, "left")
-        .select("node", "outdeg")
-        .repartition(int(n_part), "node")
-        .persist()
-    )
+    n_part = int(os.environ.get("MMBD_CC_SHUFFLE_PARTITIONS", "8"))
+    walk, statics = pagerank_walk(edges, n_part, "dst")
+    statics_cached = statics.persist()
     n_seeds = statics_cached.where(F.col("node") % seed_mod == 0).count()
     if n_seeds == 0:  # no trusted nodes in this graph — PPR is undefined
         walk.unpersist()
@@ -86,8 +68,6 @@ def personalized_pagerank(
         F.when(F.col("node") % seed_mod == 0, F.lit(1.0 / n_seeds)).otherwise(F.lit(0.0)),
     )
 
-    old_part = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", n_part)
     try:
         ranks = statics.withColumn("rank", F.col("sw"))
         for it in range(iters):
@@ -97,7 +77,7 @@ def personalized_pagerank(
                 .agg(F.sum(F.col("rank") / F.col("outdeg")).alias("m"))
             )
             new_ranks = (
-                # merge-hinted co-partitioned join (see graph.pagerank r13)
+                # merge-hinted co-partitioned join (see graph.pagerank)
                 statics.join(contribs.hint("merge"), statics.node == contribs.dst, "left")
                 .select(
                     "node",
@@ -114,7 +94,6 @@ def personalized_pagerank(
                 new_ranks = new_ranks.localCheckpoint(eager=True)
             ranks = new_ranks
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_part)
         walk.unpersist()
         statics_cached.unpersist()
     return ranks.select("node", "rank")

@@ -144,6 +144,110 @@ def test_pagerank_reliable_checkpoint_cadence(spark, tmp_path):
     assert plain == ck
 
 
+# jobs one q_pagerank call launches at sf0.001 (statics materialization
+# with the walk under it, the rank checkpoints, then the result); the
+# nodes-distinct + deg-join setup launched 30
+_PAGERANK_JOBS_SF0001 = 25
+
+
+def test_symmetric_reads_input_once(spark, sf_dir):
+    """symmetric() emits every edge both ways with its carried columns,
+    and scans its input once: the plan over trade_edges (which ends in a
+    distinct exchange) holds no ReusedExchange — a union of two
+    projections reads that exchange twice."""
+    edges = spark.createDataFrame([(1, 2, 5), (2, 3, 7)], "src long, dst long, w long")
+    assert sorted(tuple(r) for r in G.symmetric(edges, "w").collect()) == [
+        (1, 2, 5), (2, 1, 5), (2, 3, 7), (3, 2, 7)
+    ]
+    assert G.symmetric(edges).columns == ["src", "dst"]
+    sym = G.symmetric(G.trade_edges(spark, sf_dir))
+    assert sym.count() == 2 * G.trade_edges(spark, sf_dir).count()
+    sym.collect()  # AQE final plan: exchange reuse shows up here
+    assert "ReusedExchange" not in sym._jdf.queryExecution().executedPlan().toString()
+
+
+def test_pagerank_broadcast_setup_one_exchange(spark, sf_dir):
+    """The broadcast arm's static inputs cost one exchange above the edge
+    list: the walk's clustering repartition.  The distinct rides it, and
+    statics (outdeg = indeg on a symmetric walk, nodes = the dst keys) is
+    one aggregate over the same clustering, with no ENSURE_REQUIREMENTS
+    exchange between the walk and statics in the executed plan."""
+    import re
+
+    walk, statics = G.pagerank_walk(_trade_edges(spark, sf_dir), 8, "dst")
+    try:
+        statics.collect()
+        plan = statics._jdf.queryExecution().executedPlan().executedPlan().toString()
+    finally:
+        walk.unpersist()
+    # distinct (partitioning, origin) pairs, expression ids stripped: the
+    # cached walk's plan prints its initial and final forms
+    ex = {
+        (re.sub(r"#\d+L?", "", part), origin)
+        for part, origin in re.findall(r"Exchange (\w+\([^)]*\)), (\w+)", plan)
+    }
+    assert ex == {("hashpartitioning(dst, 8)", "REPARTITION_BY_NUM")}, ex
+
+
+def test_pagerank_query_job_count_bounded(spark, sf_dir):
+    """One q_pagerank call (plan build + collect) stays within two jobs of
+    the setup-from-the-walk count.  The setup's extra jobs are invisible
+    to the loop-only byte envelopes; the job count sees them."""
+    sc = spark.sparkContext
+    group = "test:pagerank-jobs"
+    sc.setJobGroup(group, group)
+    try:
+        G.q_pagerank(spark, sf_dir).collect()
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc._jsc.clearJobGroup()
+    assert jobs <= _PAGERANK_JOBS_SF0001 + 2, jobs
+
+
+@pytest.mark.parametrize("join_strategy", ["broadcast", "copartition"])
+def test_pagerank_invariant_to_shuffle_partitions(spark, sf_dir, join_strategy, monkeypatch):
+    """Ranks must not depend on the session's shuffle partition count.
+    The broadcast arm never writes session conf (its loop has no
+    exchange); the copartition arm pins the count for its loop and must
+    hand the session back unchanged."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    edges = _trade_edges(spark, sf_dir)
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    got = []
+    try:
+        for parts in (1, 8, 64):
+            spark.conf.set(key, str(parts))
+            with monkeypatch.context() as m:
+                if join_strategy == "broadcast":
+                    m.setattr(RuntimeConfig, "set", lambda *a: pytest.fail("operator set a conf"))
+                got.append(
+                    sorted(
+                        tuple(r)
+                        for r in G.pagerank(spark, edges, join_strategy=join_strategy).collect()
+                    )
+                )
+            assert spark.conf.get(key) == str(parts)
+    finally:
+        spark.conf.set(key, old)
+    assert got[0] == got[1] == got[2]
+    assert abs(sum(r[1] for r in got[0]) - 1.0) < 1e-6
+
+
+@pytest.mark.parametrize("directed", [False, True])
+def test_pagerank_statics_degrees(spark, directed):
+    """statics holds one row per node with its out-degree; a node with no
+    out-edges (only reachable in the directed walk) gets NULL."""
+    edges = spark.createDataFrame([(1, 2), (2, 3), (1, 3), (1, 2)], "src long, dst long")
+    walk, statics = G.pagerank_walk(edges, 4, "dst", directed)
+    try:
+        got = {r["node"]: r["outdeg"] for r in statics.collect()}
+    finally:
+        walk.unpersist()
+    assert got == ({1: 2, 2: 1, 3: None} if directed else {1: 2, 2: 2, 3: 2})
+
+
 # --- triangle counting -------------------------------------------------
 
 

@@ -47,3 +47,25 @@ def test_trustrank_empty_seed_set_raises(spark):
     edges = spark.createDataFrame([(1, 3), (3, 5)], ["src", "dst"])
     with pytest.raises(ValueError, match="empty seed set"):
         personalized_pagerank(spark, edges)  # odd ids only: none % 20 == 0
+
+
+def test_trustrank_invariant_to_shuffle_partitions(spark, sf_dir, monkeypatch):
+    """Ranks must not depend on the session's shuffle partition count,
+    and the operator never writes session conf: its loop has no
+    exchange, so it needs no partition pin."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    edges = trade_edges(spark, sf_dir).localCheckpoint(eager=True)
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    got = []
+    try:
+        for parts in (1, 8, 64):
+            spark.conf.set(key, str(parts))
+            with monkeypatch.context() as m:
+                m.setattr(RuntimeConfig, "set", lambda *a: pytest.fail("operator set a conf"))
+                got.append(rows_set(personalized_pagerank(spark, edges)))
+            assert spark.conf.get(key) == str(parts)
+    finally:
+        spark.conf.set(key, old)
+    assert got[0] == got[1] == got[2]

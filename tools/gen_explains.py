@@ -194,11 +194,16 @@ AUDIT = {
     "q_time_weighted_avg": "one per-user window pass for holding intervals + one combinable "
     "agg; weighted sums ride DECIMAL(38,0) so multi-day gaps can't overflow",
     "q_pagerank": "the FINAL frame explains as a bare ExistingRDD scan — that IS the property: "
-    "per-round eager checkpoints truncate lineage, so the plan never grows with iterations.  The "
-    "per-iteration shape (edges persisted clustered on src, never exchanged/sorted in the loop; "
-    "ranks/deg/contribs broadcast; one map-side-combinable agg on dst) is verified by the measured "
-    "shuffle volume instead: 42 MB/10 iterations at sf0.1 vs 150 MB for the r6 re-exchange form "
-    "(BENCH_local.json queries_shuffle)",
+    "per-round eager checkpoints truncate lineage, so the plan never grows with iterations.  The setup reads "
+    "trade_edges once (symmetric(): both directions from one inline generator, no "
+    "ReusedExchange), clusters the walk with ONE REPARTITION_BY_NUM exchange on dst, and builds "
+    "statics (node, outdeg) as a count aggregate riding that clustering — outdeg = indeg and the "
+    "node set = the dst keys on a symmetric walk — with no ENSURE_REQUIREMENTS exchange in the "
+    "executed plan (tests/test_graph.py::test_pagerank_broadcast_setup_one_exchange).  The 10 "
+    "iterations move 0 B: the rank vector is broadcast, the contribution sum on dst rides the "
+    "walk's clustering and statics ⋈ contribs is a co-partitioned merge join "
+    "(plans/r15/q_pagerank_after.txt: 25 jobs, 16.2 MB written at sf0.1 vs 30 jobs, 17.3 MB "
+    "written and 22.7 MB read before)",
     "q_large_orders": "the HAVING-filtered survivor set (per-order quantity agg, ~1% of orders) "
     "broadcasts into orders and customer (BroadcastHashJoin — orders never shuffles for the "
     "join), the lineitem agg is partial/final, and the top-k is TakeOrderedAndProject, never a "
