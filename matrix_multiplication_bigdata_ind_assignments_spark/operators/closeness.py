@@ -80,7 +80,7 @@ def landmark_harmonic(
     - ``'broadcast'`` (default): the frontier words broadcast into the
       expansion join — zero edge movement while the frontier fits an
       executor.  Measured negative: clustering the resident edges on dst
-      at 8 partitions so the bit_or rides the exchange (the bfs_hops move)
+      at 8 partitions so the bit_or rides the exchange (graph.relax's move)
       ran 7.0-7.9 s vs 6.4-7.4 s at sf0.1 — the expansion is
       compute-heavy and loses the checkpoint's ~64-way map parallelism.
     - ``'copartition'``: the symmetric edges are hash-clustered on src

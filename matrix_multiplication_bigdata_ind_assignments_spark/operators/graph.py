@@ -362,13 +362,9 @@ def trade_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _decode_ranks(ranks: DataFrame) -> DataFrame:
-    """(node, rank) → (kind, key, rank): undo trade_edges' 2k/2k+1 node
-    encoding and round for the 6-dp oracle comparison."""
-    return ranks.select(
-        F.when(F.col("node") % 2 == 0, F.lit("supplier")).otherwise(F.lit("customer")).alias("kind"),
-        (F.col("node") / 2).cast("long").alias("key"),
-        F.round("rank", 6).alias("rank"),
-    )
+    """(node, rank) → (kind, key, rank) rounded for the 6-dp oracle
+    comparison."""
+    return _decode_nodes(ranks, F.round("rank", 6).alias("rank"))
 
 
 @register("q_pagerank", oracle=_sql_pagerank())
@@ -1137,122 +1133,128 @@ def q_degree_powerlaw(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _BFS_ROUNDS = 6  # fixed unroll; the trade graph settles in ≤3 (dense bipartite)
+_WP_SEED_CAP = 1 << 40  # seed sentinel, far above any edge weight
+
+#: path semirings for ``relax``: (extend(v, w), aggregate, improves(cand, v),
+#: seed value).  ``hops`` ignores ``w`` and its edges carry no weight column.
+_SEMIRINGS = {
+    "hops": (lambda v, w: v + 1, F.min, lambda c, v: c < v, 0),
+    "min_plus": (lambda v, w: v + w, F.min, lambda c, v: c < v, 0),
+    "max_min": (lambda v, w: F.least(v, w), F.max, lambda c, v: c > v, _WP_SEED_CAP),
+}
 
 
-def bfs_hops(
-    edges: DataFrame, seeds: DataFrame, rounds: int = _BFS_ROUNDS, truncate: bool = True,
-    report_fixpoint: bool = False,
-) -> DataFrame:
-    """Multi-source BFS hop distance over an undirected edge list
-    ``(src, dst)`` from a ``(node)`` seed set: returns (node, dist) for
-    every vertex reachable within ``rounds`` hops, dist = exact shortest
-    hop count (unit weights, so first-reach == minimal).
-
-    Scale shape (the delta/frontier form, NOT whole-vector relaxation):
-    each round joins the edge list against ONLY the newly-settled
-    frontier — per-round shuffle is O(|frontier| · avg-degree), not
-    O(|V|) — then anti-joins the visited set to keep first reaches.
-    Frontier and visited state are localCheckpoint'ed per round (swap
-    for .checkpoint() cadence on a real cluster, the graph.pagerank
-    discipline), so iteration k never re-plans k-1 predecessors.  At
-    100 TB this is the standard Pregel BFS: O(diameter) passes, each
-    linear in the edges actually touched.  ``truncate=False`` keeps the
-    full lineage (results identical — integer monotone relaxation is
-    cadence-invariant) so plan-shape tests can inspect the per-round
-    join strategy that eager checkpoints otherwise materialize away.
-
-    Determinism/oracle contract: all-integer, monotone (a settled dist
-    never changes), fixed round count ≥ the measured fixpoint — the
-    identically-unrolled DuckDB min-relaxation CTEs agree exactly
-    (min-over-union relaxation and frontier first-reach compute the
-    same BFS levels).  The caller certifies fixpoint (q_bfs_hops runs
-    one extra expansion and fails loudly on any improvement) so a
-    regenerated fixture needing deeper search cannot hash green
-    wrong-together (the q_kcore / ADVICE-r9 lesson).
-
-    ``report_fixpoint=True`` returns ``(dist, observed)`` where
-    ``observed`` records whether the loop SAW an empty frontier.  An
-    empty frontier is itself a fixpoint PROOF, not just a stopping
-    heuristic: every settled node entered some round's frontier when its
-    distance last improved and was expanded in the following round, so
-    by the time a frontier comes back empty, every (settled node →
-    neighbor) relaxation has already been offered and rejected — a full
-    re-expansion of the settled set can improve nothing.  Callers that
-    otherwise pay an O(|E|) certificate join (q_bfs_hops and the
-    widest/shortest twins) skip it when ``observed`` is True and run it
-    only on the uncertified path (loop exhausted ``rounds`` with a
-    non-empty frontier) — measured r12: the certificate was ~1/4 of
-    q_bfs_hops' wall at sf0.1.
-
-    r13 state discipline (guide §2.4, the label_prop/hits move): the
-    symmetric edge list is hash-clustered on ``dst`` ONCE and persisted
-    (persist keeps outputPartitioning; localCheckpoint forgets it — the
-    graph.pagerank lesson), so each round's expansion aggregate
-    groupBy(node=dst) rides that one-time exchange instead of paying a
-    message-volume exchange per round, and the per-round first-reach
-    anti-join + union pair is collapsed into ONE full-outer merge
-    (coalesce keeps the settled value — first reach is final under unit
-    weights, so the merge is value-identical to anti-join + union):
-    2 joins + 2 eager checkpoints per round become 1 + 1.  The merged
-    state is eagerly localCheckpoint'ed per round — a persist-chained
-    state was A/B'd and REJECTED: it keeps hash(node) clustering (the
-    merge's state side pays no exchange) but every round's lineage
-    references the previous round's plan, so analysis + cache-lookup
-    work grows per round and the plan STRING grows exponentially when
-    both the state and frontier reference it (measured: driver OOM at
-    8 rounds in a bare session; a frontier-leaf variant still ran
-    rounds 6-7 at 2-4× the flat-checkpoint cost).  The checkpointed
-    state costs one |V|-row exchange per round inside the merge —
-    negligible next to the removed message-volume exchange
-    (probe: 8.1 s chained-persist vs 5.1 s flat checkpoint, sf0.1)."""
+def _relax_edges(edges: DataFrame, semiring: str) -> DataFrame:
+    """The symmetric edge list hash-clustered on ``dst`` and persisted:
+    persist keeps the output partitioning (localCheckpoint forgets it),
+    so every round's aggregate on ``dst`` rides this one exchange."""
     import os
 
     n_part = int(os.environ.get("MMBD_CC_SHUFFLE_PARTITIONS", "8"))
-    ck = (lambda df: df.localCheckpoint(eager=True)) if truncate else (lambda df: df)
-    sym = symmetric(edges).repartition(n_part, "dst")
-    if truncate:
-        sym = sym.persist()
-    dist = ck(seeds.select("node", F.lit(0).cast("long").alias("dist")))
-    frontier = dist
-    observed_fixpoint = False
+    carry = () if semiring == "hops" else ("w",)
+    return symmetric(edges, *carry).repartition(n_part, "dst").persist()
+
+
+def _relax_round(sym: DataFrame, state: DataFrame, frontier: DataFrame, semiring: str) -> DataFrame:
+    """One relaxation round: the broadcast frontier ``(node, v)`` extended
+    over ``sym`` and aggregated on ``dst``, then one full-outer merge
+    with ``state``.  Returns ``(node, v, mmbd_new)``; ``mmbd_new`` marks
+    the rows whose value improved (the next frontier)."""
+    extend, aggregate, improves, _ = _SEMIRINGS[semiring]
+    reached = (
+        sym.join(F.broadcast(frontier.withColumnRenamed("node", "src")), "src")
+        .select(F.col("dst").alias("node"), extend(F.col("v"), F.col("w")).alias("cand"))
+        .groupBy("node")
+        .agg(aggregate("cand").alias("cand"))
+    )
+    imp = F.col("cand").isNotNull() & (F.col("v").isNull() | improves(F.col("cand"), F.col("v")))
+    return state.join(reached, "node", "full_outer").select(
+        "node", F.when(imp, F.col("cand")).otherwise(F.col("v")).alias("v"), imp.alias("mmbd_new")
+    )
+
+
+def relax(edges: DataFrame, seeds: DataFrame, semiring: str, rounds: int) -> DataFrame:
+    """Multi-source path relaxation over an undirected edge list ``(src,
+    dst[, w])`` from a ``(node)`` seed set under one of ``_SEMIRINGS``:
+    ``hops`` (BFS hop count), ``min_plus`` (shortest path over cost
+    ``w``), ``max_min`` (widest path: the best bottleneck weight ``w``).
+    Returns ``(node, v)`` for every vertex reached; seeds start at the
+    semiring's seed value.
+
+    Invariants:
+
+    - Monotone: a value only moves in the aggregate's direction, and the
+      merge keeps the settled value unless the candidate improves it, so
+      the frontier (improved rows only) reaches the same fixpoint as the
+      whole-vector relaxation the unrolled DuckDB oracles compute.  All
+      integer, so the engines agree exactly.
+    - An empty frontier proves the fixpoint: every value entered some
+      round's frontier when it last improved and was extended over all
+      its edges the round after, so once a round improves nothing, every
+      (node → neighbour) relaxation has been offered and rejected.
+    - If ``rounds`` run out before that, one more round is the
+      certificate: by the same argument only the last frontier's edges
+      can still improve anything, so it equals a full O(|E|) relaxation
+      of the settled state.  Any improvement there raises
+      ``AssertionError`` instead of returning a short unroll that the
+      identically-unrolled oracle would match.
+    - Plan per round: the frontier broadcasts into the persisted
+      ``dst``-clustered edges, the aggregate on ``dst`` needs no
+      exchange, and one full-outer merge is eagerly local-checkpointed.
+      The improved-row count is an Observation filled inside the
+      checkpoint's own job, so the fixpoint probe costs no extra job.
+
+    Measured negative (OPTIMIZATION_r13.md): a persist-chained state
+    instead of the eager checkpoint keeps ``node`` clustering, but each
+    round's plan embeds the previous round's, so the plan grows per round
+    (the plan string overflowed the Spark driver heap at 8 rounds in a
+    bare session; widest path at sf0.1 ran 9.5-10.8 s chained vs 5.1 s
+    with the flat checkpoint).
+    Swap localCheckpoint for a reliable checkpoint cadence on a cluster
+    that can lose executors."""
+    from pyspark.sql import Observation
+
+    seed = _SEMIRINGS[semiring][3]
+    sym = _relax_edges(edges, semiring)
+    state = seeds.select("node", F.lit(seed).cast("long").alias("v")).localCheckpoint(eager=True)
+    frontier = state
     try:
-        for r in range(rounds):
-            reached = (
-                sym.join(F.broadcast(frontier.withColumnRenamed("node", "src")), "src")
-                .select(F.col("dst").alias("node"), (F.col("dist") + 1).alias("cand"))
-                .groupBy("node")
-                .agg(F.min("cand").alias("cand"))
+        for r in range(rounds + 1):
+            obs = Observation()
+            merged = (
+                _relax_round(sym, state, frontier, semiring)
+                .observe(obs, F.count_if("mmbd_new").alias("n"))
+                .localCheckpoint(eager=True)
             )
-            # full-outer merge == anti-join + union: a settled dist is
-            # final (unit-weight first reach is minimal), so
-            # coalesce(dist, cand) keeps every settled row unchanged and
-            # admits exactly the first-reached nodes — bit-identical rows
-            merged = ck(
-                dist.join(reached, "node", "full_outer").select(
-                    "node",
-                    F.coalesce(F.col("dist"), F.col("cand")).alias("dist"),
-                    (F.col("dist").isNull() & F.col("cand").isNotNull()).alias("mmbd_new"),
-                )
-            )
-            new = merged.where(F.col("mmbd_new")).select("node", "dist")
-            dist = merged.select("node", "dist")
-            if truncate and new.isEmpty():
-                # empty frontier = fixpoint: every remaining round relaxes
-                # nothing, so stopping returns the identical fixed-unroll
-                # result (the label_prop short-circuit discipline).  The
-                # probe (isEmpty over the round's checkpoint blocks) runs
-                # EVERY round since r12: besides the skipped rounds it
-                # also buys the caller's O(|E|) certificate skip (see
-                # report_fixpoint above).  Only on the truncating path —
-                # truncate=False exists for plan-shape tests that must
-                # see every round's join shape.
-                observed_fixpoint = True
+            state = merged.select("node", "v")
+            improved = obs.get["n"]
+            if not improved:
                 break
-            frontier = new
+            if r == rounds:
+                raise AssertionError(
+                    f"relax({semiring!r}): {improved} vertices still improvable after "
+                    f"{rounds} rounds — raise the query's round constant for this fixture"
+                )
+            frontier = merged.where(F.col("mmbd_new")).select("node", "v")
     finally:
-        if truncate:
-            sym.unpersist()  # dist is a projection of an eager checkpoint
-    return (dist, observed_fixpoint) if report_fixpoint else dist
+        sym.unpersist()  # state is a projection of an eager checkpoint
+    return state
+
+
+def _trade_seeds(edges: DataFrame) -> DataFrame:
+    """The path queries' seed set: suppliers with suppkey % 10 == 0.
+    Suppliers are the even ``src`` values, so ``dst`` is never read."""
+    return edges.select(F.col("src").alias("node")).where(F.col("node") % 20 == 0).distinct()
+
+
+def _decode_nodes(df: DataFrame, value) -> DataFrame:
+    """(node, …) → (kind, key, value): undo trade_edges' 2k/2k+1 node
+    encoding beside the ``value`` column expression."""
+    return df.select(
+        F.when(F.col("node") % 2 == 0, F.lit("supplier")).otherwise(F.lit("customer")).alias("kind"),
+        (F.col("node") / 2).cast("long").alias("key"),
+        value,
+    )
 
 
 def _sql_bfs_hops(rounds: int = _BFS_ROUNDS) -> str:
@@ -1290,30 +1292,6 @@ FROM d{rounds}
     )
 
 
-def _certify_bfs_fixpoint(edges: DataFrame, dist: DataFrame) -> None:
-    """The O(|E|) BFS fixpoint certificate: expand the FULL settled set
-    once; raise if anything improves.  Called by q_bfs_hops only on the
-    uncertified path (loop exhausted its unroll without an observed
-    empty frontier); tested directly on an under-iterated dist."""
-    sym = symmetric(edges)
-    relaxed = (
-        sym.join(dist.withColumnRenamed("node", "src"), "src")
-        .select(F.col("dst").alias("node"), (F.col("dist") + 1).alias("cand"))
-        .groupBy("node")
-        .agg(F.min("cand").alias("cand"))
-    )
-    improved = (
-        relaxed.join(dist, "node", "left_outer")
-        .where(F.col("dist").isNull() | (F.col("cand") < F.col("dist")))
-        .count()
-    )
-    if improved:
-        raise AssertionError(
-            f"q_bfs_hops: {improved} vertices still improvable after "
-            f"{_BFS_ROUNDS} rounds — raise _BFS_ROUNDS for this fixture"
-        )
-
-
 @register(
     "q_bfs_hops",
     oracle=_sql_bfs_hops(),
@@ -1321,120 +1299,25 @@ def _certify_bfs_fixpoint(edges: DataFrame, dist: DataFrame) -> None:
 )
 def q_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-source BFS hop distance over the supplier↔customer trade
-    graph (bfs_hops over trade_edges): every vertex's exact shortest
+    graph (relax 'hops' over trade_edges): every vertex's exact shortest
     hop count from the seed set (suppliers with suppkey % 10 == 0) —
     the graph-distance primitive beside q_pagerank's centrality and
     q_kcore's density (reachability tiers, blast-radius analysis,
     influence hops).  ORACLE-CHECKED via identically-unrolled
     min-relaxation CTEs (all-integer, monotone, fixed unroll — see
-    bfs_hops' contract).  Fixpoint is CERTIFIED in-query: one extra
+    relax's invariants).  Fixpoint is CERTIFIED in-query: one extra
     frontier expansion after the fixed rounds must reach nothing new,
     else the query raises instead of letting Spark and the
     identically-truncated oracle hash green wrong-together."""
     edges = trade_edges(spark, sf_dir)
-    seeds = (
-        edges.select(F.col("src").alias("node"))
-        .unionAll(edges.select(F.col("dst").alias("node")))
-        .where(F.col("node") % 20 == 0)
-        .distinct()
-    )
-    dist, at_fixpoint = bfs_hops(edges, seeds, report_fixpoint=True)
-    # Fixpoint certificate: expanding the full settled set once more
-    # must improve nothing (monotone relaxation => this proves ALL
-    # shortest paths within the unroll are final).  When the loop itself
-    # OBSERVED an empty frontier, that observation is already a proof of
-    # the same fact (every settled node was expanded after its last
-    # improvement — see bfs_hops' report_fixpoint contract), so the
-    # O(|E|) certificate join runs only on the uncertified path: loop
-    # exhausted _BFS_ROUNDS while still improving (r12 optimization;
-    # tests/test_graph.py::test_frontier_certificate_fires_when_rounds_short
-    # pins that the certificate still fires there).
-    if not at_fixpoint:
-        _certify_bfs_fixpoint(edges, dist)
-    return dist.select(
-        F.when(F.col("node") % 2 == 0, F.lit("supplier"))
-        .otherwise(F.lit("customer"))
-        .alias("kind"),
-        (F.col("node") / 2).cast("long").alias("key"),
-        F.col("dist").cast("long").alias("dist"),
-    )
+    dist = relax(edges, _trade_seeds(edges), "hops", _BFS_ROUNDS)
+    return _decode_nodes(dist, F.col("v").cast("long").alias("dist"))
 
 
 _WP_ROUNDS = 8  # fixed unroll; max-min relaxation improves through longer
 # paths than BFS levels — measured fixpoint: 5 rounds at sf0.001/0.01,
 # 7 at sf0.1 (post-fixpoint rounds cost ~nothing: the frontier is empty);
 # the in-query certificate fails loudly if a fixture ever needs >8
-_WP_SEED_CAP = 1 << 40  # seed sentinel, far above any edge weight
-
-
-def widest_path(edges_w: DataFrame, seeds: DataFrame, rounds: int = _WP_ROUNDS,
-                truncate: bool = True, report_fixpoint: bool = False) -> DataFrame:
-    """Maximum-bottleneck (widest-path) capacity from a seed set over a
-    weighted undirected edge list ``(src, dst, w)``: cap(v) = max over
-    paths of the minimum edge weight — the supply-chain robustness /
-    max-flow-lite primitive.  Same delta/frontier shape as bfs_hops
-    (per-round work O(|frontier|·deg)); caps only ever INCREASE, so
-    propagating from improved nodes alone reaches the same monotone
-    fixpoint as whole-vector relaxation (the unrolled oracle's form) —
-    all-integer, so the engines agree exactly.
-
-    ``report_fixpoint=True`` returns ``(cap, observed)`` — same contract
-    and proof as bfs_hops: every improved node re-enters the frontier
-    and is expanded the following round, so an observed empty frontier
-    means every (settled → neighbor) relaxation was already offered and
-    rejected; the caller's O(|E|) certificate join is redundant then.
-
-    r13 state discipline: identical to bfs_hops — sym persisted
-    hash(dst) once (the expansion aggregate rides it, no per-round
-    message exchange), the improved-detect + state-update pair
-    (left-outer join, anti-join, union) collapsed into ONE full-outer
-    merge (max-monotone: the merged value is cand exactly when it
-    improves on the settled cap, else the settled cap — value-identical
-    rows), per-round state eagerly checkpointed (flat plans; see
-    bfs_hops for why a persist-chained state was rejected)."""
-    import os
-
-    n_part = int(os.environ.get("MMBD_CC_SHUFFLE_PARTITIONS", "8"))
-    ck = (lambda df: df.localCheckpoint(eager=True)) if truncate else (lambda df: df)
-    sym = symmetric(edges_w, "w").repartition(n_part, "dst")
-    if truncate:
-        sym = sym.persist()
-    cap = ck(seeds.select("node", F.lit(_WP_SEED_CAP).cast("long").alias("cap")))
-    frontier = cap
-    observed_fixpoint = False
-    imp = F.col("cand").isNotNull() & (F.col("cap").isNull() | (F.col("cand") > F.col("cap")))
-    try:
-        for r in range(rounds):
-            reached = (
-                sym.join(F.broadcast(frontier.withColumnRenamed("node", "src")), "src")
-                .select(
-                    F.col("dst").alias("node"),
-                    F.least(F.col("cap"), F.col("w")).alias("cand"),
-                )
-                .groupBy("node")
-                .agg(F.max("cand").alias("cand"))
-            )
-            merged = ck(
-                cap.join(reached, "node", "full_outer").select(
-                    "node",
-                    F.when(imp, F.col("cand")).otherwise(F.col("cap")).alias("cap"),
-                    imp.alias("mmbd_new"),
-                )
-            )
-            improved = merged.where(F.col("mmbd_new")).select("node", "cap")
-            cap = merged.select("node", "cap")
-            if truncate and improved.isEmpty():
-                # empty frontier = monotone fixpoint; rest are no-ops.
-                # Probed every round since r12 — besides skipped rounds the
-                # probe buys the caller's certificate skip (report_fixpoint
-                # above).
-                observed_fixpoint = True
-                break
-            frontier = improved
-    finally:
-        if truncate:
-            sym.unpersist()  # cap is a projection of an eager checkpoint
-    return (cap, observed_fixpoint) if report_fixpoint else cap
 
 
 def trade_edges_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1490,28 +1373,6 @@ FROM c{rounds}
     )
 
 
-def _certify_widest_fixpoint(ew: DataFrame, cap: DataFrame) -> None:
-    """Max-min twin of _certify_bfs_fixpoint (one full relaxation of the
-    settled capacities; raise on any improvement)."""
-    sym = symmetric(ew, "w")
-    relaxed = (
-        sym.join(cap.withColumnRenamed("node", "src"), "src")
-        .select(F.col("dst").alias("node"), F.least(F.col("cap"), F.col("w")).alias("cand"))
-        .groupBy("node")
-        .agg(F.max("cand").alias("cand"))
-    )
-    improved = (
-        relaxed.join(cap, "node", "left_outer")
-        .where(F.col("cap").isNull() | (F.col("cand") > F.col("cap")))
-        .count()
-    )
-    if improved:
-        raise AssertionError(
-            f"q_widest_path: {improved} vertices still improvable after "
-            f"{_WP_ROUNDS} rounds — raise _WP_ROUNDS for this fixture"
-        )
-
-
 @register(
     "q_widest_path",
     oracle=_sql_widest_path(),
@@ -1527,24 +1388,8 @@ def q_widest_path(spark: SparkSession, sf_dir: str) -> DataFrame:
     CERTIFIED in-query with one extra relaxation, the q_bfs_hops
     discipline.  Seeds carry the 2^40 sentinel capacity."""
     ew = trade_edges_weighted(spark, sf_dir)
-    seeds = (
-        ew.select(F.col("src").alias("node"))
-        .unionAll(ew.select(F.col("dst").alias("node")))
-        .where(F.col("node") % 20 == 0)
-        .distinct()
-    )
-    cap, at_fixpoint = widest_path(ew, seeds, report_fixpoint=True)
-    # certificate only on the uncertified path — an observed empty
-    # frontier is already a fixpoint proof (see q_bfs_hops' comment)
-    if not at_fixpoint:
-        _certify_widest_fixpoint(ew, cap)
-    return cap.select(
-        F.when(F.col("node") % 2 == 0, F.lit("supplier"))
-        .otherwise(F.lit("customer"))
-        .alias("kind"),
-        (F.col("node") / 2).cast("long").alias("key"),
-        F.col("cap").cast("long").alias("capacity"),
-    )
+    cap = relax(ew, _trade_seeds(ew), "max_min", _WP_ROUNDS)
+    return _decode_nodes(cap, F.col("v").cast("long").alias("capacity"))
 
 
 _NJ_TOPK = 3
@@ -1660,72 +1505,6 @@ _SP_ROUNDS = 10  # fixed unroll; min-plus can improve through paths LONGER
 _SP_COST = "1000000 // w + 1"  # inverse-strength latency: strong links cheap
 
 
-def shortest_path(edges_w: DataFrame, seeds: DataFrame, rounds: int = _SP_ROUNDS,
-                  truncate: bool = True, report_fixpoint: bool = False) -> DataFrame:
-    """Min-plus (Bellman-Ford) shortest-path distance from a seed set
-    over a weighted undirected edge list ``(src, dst, cost)``: dist(v)
-    = min over paths of the edge-cost sum.  The additive twin of
-    widest_path — same improved-only frontier (distances only ever
-    DECREASE, so relaxing from improved nodes alone reaches the same
-    monotone fixpoint as whole-vector Bellman-Ford), all-integer so
-    the engines agree exactly.  Per-round shuffle is O(|frontier|·deg);
-    lineage truncation per round (swap localCheckpoint for checkpoint
-    cadence on a real cluster).
-
-    ``report_fixpoint=True`` returns ``(dist, observed)`` — same
-    contract and proof as widest_path: an observed empty frontier means
-    every settled value was already expanded after its last improvement,
-    so the caller's full-relaxation certificate is redundant.
-
-    r13 state discipline: identical to bfs_hops/widest_path — sym
-    persisted hash(dst) once (the expansion aggregate rides it),
-    improved-detect + state-update collapsed into one full-outer merge
-    (min-monotone twin of widest_path), per-round state eagerly
-    checkpointed (flat plans; see bfs_hops)."""
-    import os
-
-    n_part = int(os.environ.get("MMBD_CC_SHUFFLE_PARTITIONS", "8"))
-    ck = (lambda df: df.localCheckpoint(eager=True)) if truncate else (lambda df: df)
-    sym = symmetric(edges_w, "cost").repartition(n_part, "dst")
-    if truncate:
-        sym = sym.persist()
-    dist = ck(seeds.select("node", F.lit(0).cast("long").alias("dist")))
-    frontier = dist
-    observed_fixpoint = False
-    imp = F.col("cand").isNotNull() & (F.col("dist").isNull() | (F.col("cand") < F.col("dist")))
-    try:
-        for r in range(rounds):
-            reached = (
-                sym.join(F.broadcast(frontier.withColumnRenamed("node", "src")), "src")
-                .select(
-                    F.col("dst").alias("node"),
-                    (F.col("dist") + F.col("cost")).alias("cand"),
-                )
-                .groupBy("node")
-                .agg(F.min("cand").alias("cand"))
-            )
-            merged = ck(
-                dist.join(reached, "node", "full_outer").select(
-                    "node",
-                    F.when(imp, F.col("cand")).otherwise(F.col("dist")).alias("dist"),
-                    imp.alias("mmbd_new"),
-                )
-            )
-            improved = merged.where(F.col("mmbd_new")).select("node", "dist")
-            dist = merged.select("node", "dist")
-            if truncate and improved.isEmpty():
-                # empty frontier = monotone fixpoint; rest are no-ops.
-                # Probed every round since r12 (buys the certificate skip
-                # too).
-                observed_fixpoint = True
-                break
-            frontier = improved
-    finally:
-        if truncate:
-            sym.unpersist()  # dist is a projection of an eager checkpoint
-    return (dist, observed_fixpoint) if report_fixpoint else dist
-
-
 def _sql_shortest_path(rounds: int = _SP_ROUNDS) -> str:
     """The identical min-plus relaxation unrolled into DuckDB CTEs."""
     ctes = [
@@ -1765,28 +1544,6 @@ FROM c{rounds}
     )
 
 
-def _certify_shortest_fixpoint(ew: DataFrame, dist: DataFrame) -> None:
-    """Min-plus twin of _certify_bfs_fixpoint (one full relaxation of
-    the settled distances; raise on any improvement)."""
-    sym = symmetric(ew, "cost")
-    relaxed = (
-        sym.join(dist.withColumnRenamed("node", "src"), "src")
-        .select(F.col("dst").alias("node"), (F.col("dist") + F.col("cost")).alias("cand"))
-        .groupBy("node")
-        .agg(F.min("cand").alias("cand"))
-    )
-    improved = (
-        relaxed.join(dist, "node", "left_outer")
-        .where(F.col("dist").isNull() | (F.col("cand") < F.col("dist")))
-        .count()
-    )
-    if improved:
-        raise AssertionError(
-            f"q_shortest_path: {improved} vertices still improvable after "
-            f"{_SP_ROUNDS} rounds — raise _SP_ROUNDS for this fixture"
-        )
-
-
 @register(
     "q_shortest_path",
     oracle=_sql_shortest_path(),
@@ -1805,25 +1562,9 @@ def q_shortest_path(spark: SparkSession, sf_dir: str) -> DataFrame:
     with one extra relaxation (the q_widest_path discipline), so a
     fixture needing deeper search fails loudly instead of hashing
     green wrong-together."""
-    ew = trade_edges_weighted(spark, sf_dir).selectExpr("src", "dst", f"{_SP_COST.replace('//', ' DIV ')} AS cost")
-    seeds = (
-        ew.select(F.col("src").alias("node"))
-        .unionAll(ew.select(F.col("dst").alias("node")))
-        .where(F.col("node") % 20 == 0)
-        .distinct()
-    )
-    dist, at_fixpoint = shortest_path(ew, seeds, report_fixpoint=True)
-    # certificate only on the uncertified path — an observed empty
-    # frontier is already a fixpoint proof (see q_bfs_hops' comment)
-    if not at_fixpoint:
-        _certify_shortest_fixpoint(ew, dist)
-    return dist.select(
-        F.when(F.col("node") % 2 == 0, F.lit("supplier"))
-        .otherwise(F.lit("customer"))
-        .alias("kind"),
-        (F.col("node") / 2).cast("long").alias("key"),
-        F.col("dist").cast("long").alias("dist"),
-    )
+    ew = trade_edges_weighted(spark, sf_dir).selectExpr("src", "dst", f"{_SP_COST.replace('//', ' DIV ')} AS w")
+    dist = relax(ew, _trade_seeds(ew), "min_plus", _SP_ROUNDS)
+    return _decode_nodes(dist, F.col("v").cast("long").alias("dist"))
 
 
 #: modularity closing text — shared verbatim by both engines: exact

@@ -376,7 +376,7 @@ def test_bfs_hops_known_graph(spark):
         [(1, 2), (2, 3), (3, 4), (4, 5)], "src long, dst long"
     )
     seeds = spark.createDataFrame([(1,)], "node long")
-    got = {r["node"]: r["dist"] for r in G.bfs_hops(edges, seeds).collect()}
+    got = {r["node"]: r["v"] for r in G.relax(edges, seeds, "hops", G._BFS_ROUNDS).collect()}
     assert got == {1: 0, 2: 1, 3: 2, 4: 3, 5: 4}
 
 
@@ -387,7 +387,7 @@ def test_bfs_hops_multi_source_takes_min(spark):
         [(1, 2), (2, 3), (3, 4), (4, 5)], "src long, dst long"
     )
     seeds = spark.createDataFrame([(1,), (5,)], "node long")
-    got = {r["node"]: r["dist"] for r in G.bfs_hops(edges, seeds).collect()}
+    got = {r["node"]: r["v"] for r in G.relax(edges, seeds, "hops", G._BFS_ROUNDS).collect()}
     assert got == {1: 0, 2: 1, 3: 2, 4: 1, 5: 0}
 
 
@@ -395,7 +395,7 @@ def test_bfs_hops_unreachable_omitted(spark):
     """Disconnected component never appears in the result."""
     edges = spark.createDataFrame([(1, 2), (10, 11)], "src long, dst long")
     seeds = spark.createDataFrame([(1,)], "node long")
-    got = {r["node"]: r["dist"] for r in G.bfs_hops(edges, seeds).collect()}
+    got = {r["node"]: r["v"] for r in G.relax(edges, seeds, "hops", G._BFS_ROUNDS).collect()}
     assert got == {1: 0, 2: 1}
 
 
@@ -422,7 +422,7 @@ def test_widest_path_hand_graph(spark):
         [(1, 4, 2), (1, 2, 9), (2, 3, 5), (3, 4, 7)], "src long, dst long, w long"
     )
     seeds = spark.createDataFrame([(1,)], "node long")
-    got = {r["node"]: r["cap"] for r in G.widest_path(edges, seeds).collect()}
+    got = {r["node"]: r["v"] for r in G.relax(edges, seeds, "max_min", G._WP_ROUNDS).collect()}
     assert got[1] == G._WP_SEED_CAP
     assert got[2] == 9
     assert got[3] == 5
@@ -490,10 +490,10 @@ def test_shortest_path_hand_graph(spark):
     cost-10 edge; unreached nodes are absent."""
     edges = spark.createDataFrame(
         [(1, 4, 10), (1, 2, 1), (2, 3, 1), (3, 4, 1), (5, 6, 2)],
-        "src long, dst long, cost long",
+        "src long, dst long, w long",
     )
     seeds = spark.createDataFrame([(1,)], "node long")
-    got = {r["node"]: r["dist"] for r in G.shortest_path(edges, seeds).collect()}
+    got = {r["node"]: r["v"] for r in G.relax(edges, seeds, "min_plus", G._SP_ROUNDS).collect()}
     assert got == {1: 0, 2: 1, 3: 2, 4: 3}
 
 
@@ -615,56 +615,81 @@ def test_assortativity_star_is_minus_one(spark, tmp_path):
     assert row["assortativity"] == -1.0
 
 
-def test_frontier_certificate_fires_when_rounds_short(spark):
-    """r12 optimization guard: the O(|E|) fixpoint certificate is
-    SKIPPED when the loop observes an empty frontier (the observation
-    is itself a proof — every settled node was expanded after its last
-    improvement), but it MUST still fire on the uncertified path: an
-    under-iterated run whose frontier never emptied."""
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (4, 5)], "src long, dst long"
-    )
+# semiring → (edges, rounds short of the fixpoint, the fixpoint map)
+_CERT_CASES = {
+    "hops": ([(1, 2), (2, 3), (3, 4), (4, 5)], 2, {1: 0, 2: 1, 3: 2, 4: 3, 5: 4}),
+    "max_min": (
+        [(1, 2, 9), (2, 3, 5), (3, 4, 7), (1, 4, 2)], 1, {1: G._WP_SEED_CAP, 2: 9, 3: 5, 4: 5}
+    ),
+    "min_plus": ([(1, 2, 9), (2, 3, 5), (3, 4, 7), (1, 4, 2)], 1, {1: 0, 2: 9, 3: 9, 4: 2}),
+}
+
+
+@pytest.mark.parametrize("semiring", sorted(_CERT_CASES))
+def test_frontier_certificate_fires_when_rounds_short(spark, semiring):
+    """relax may only return a fixpoint: when ``rounds`` run out with a
+    non-empty frontier its certificate round still improves something
+    and it raises; a full unroll observes the empty frontier and returns
+    the hand-checked map."""
+    rows, short, want = _CERT_CASES[semiring]
+    schema = "src long, dst long" + (", w long" if len(rows[0]) == 3 else "")
+    edges = spark.createDataFrame(rows, schema)
     seeds = spark.createDataFrame([(1,)], "node long")
-    # rounds=2 on a 4-hop path: frontier is non-empty at every probed
-    # round, so no fixpoint is observed and the certificate must raise
-    short, observed = G.bfs_hops(edges, seeds, rounds=2, report_fixpoint=True)
-    assert not observed
     with pytest.raises(AssertionError, match="improvable"):
-        G._certify_bfs_fixpoint(edges, short)
-    # the full unroll observes the empty frontier AND the (now skipped)
-    # certificate would also pass — the two proofs agree
-    full, observed_full = G.bfs_hops(edges, seeds, rounds=6, report_fixpoint=True)
-    assert observed_full
-    G._certify_bfs_fixpoint(edges, full)  # must not raise
-    assert {(r["node"], r["dist"]) for r in full.collect()} == {
-        (1, 0), (2, 1), (3, 2), (4, 3), (5, 4)
-    }
+        G.relax(edges, seeds, semiring, short)
+    got = {r["node"]: r["v"] for r in G.relax(edges, seeds, semiring, 10).collect()}
+    assert got == want
 
 
-def test_frontier_certificate_weighted_twins(spark):
-    """Same guard for the weighted frontier loops (widest / shortest):
-    under-iterated state fails its certificate, full unroll both
-    observes the fixpoint and passes it."""
-    ew = spark.createDataFrame(
-        [(1, 2, 9), (2, 3, 5), (3, 4, 7), (1, 4, 2)], "src long, dst long, w long"
-    )
-    seeds = spark.createDataFrame([(1,)], "node long")
-    short, observed = G.widest_path(ew, seeds, rounds=1, report_fixpoint=True)
-    assert not observed
-    with pytest.raises(AssertionError, match="improvable"):
-        G._certify_widest_fixpoint(ew, short)
-    full, observed_full = G.widest_path(ew, seeds, rounds=8, report_fixpoint=True)
-    assert observed_full
-    G._certify_widest_fixpoint(ew, full)
+# jobs one call of each path query launches at sf0.001 (seed checkpoint,
+# one checkpoint per round with the fixpoint probe riding it as an
+# Observation, then the result); a separate isEmpty probe per round
+# launched 29 / 38 / 30
+_PATH_JOBS_SF0001 = {"q_bfs_hops": 23, "q_widest_path": 30, "q_shortest_path": 24}
 
-    ewc = ew.selectExpr("src", "dst", "w AS cost")
-    shortd, observed = G.shortest_path(ewc, seeds, rounds=1, report_fixpoint=True)
-    assert not observed
-    with pytest.raises(AssertionError, match="improvable"):
-        G._certify_shortest_fixpoint(ewc, shortd)
-    fulld, observed_full = G.shortest_path(ewc, seeds, rounds=10, report_fixpoint=True)
-    assert observed_full
-    G._certify_shortest_fixpoint(ewc, fulld)
+
+@pytest.mark.parametrize("query", sorted(_PATH_JOBS_SF0001))
+def test_path_query_job_count_bounded(spark, sf_dir, query):
+    """One call of each relax-backed query (plan build + collect) stays
+    within two jobs of the probe-free count."""
+    sc = spark.sparkContext
+    group = f"test:{query}-jobs"
+    sc.setJobGroup(group, group)
+    try:
+        getattr(G, query)(spark, sf_dir).collect()
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc._jsc.clearJobGroup()
+    assert jobs <= _PATH_JOBS_SF0001[query] + 2, jobs
+
+
+@pytest.mark.parametrize("query", sorted(_PATH_JOBS_SF0001))
+def test_path_query_invariant_to_shuffle_partitions(spark, sf_dir, query, monkeypatch):
+    """Results must not depend on the session's shuffle partition count,
+    and relax never writes session conf (its clustering is an explicit
+    repartition)."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    relax = G.relax
+
+    def poisoned(*a, **kw):
+        with monkeypatch.context() as m:
+            m.setattr(RuntimeConfig, "set", lambda *_: pytest.fail("relax set a conf"))
+            return relax(*a, **kw)
+
+    monkeypatch.setattr(G, "relax", poisoned)
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    got = []
+    try:
+        for parts in (1, 8, 64):
+            spark.conf.set(key, str(parts))
+            got.append(sorted(tuple(r) for r in getattr(G, query)(spark, sf_dir).collect()))
+            assert spark.conf.get(key) == str(parts)
+    finally:
+        spark.conf.set(key, old)
+    assert got[0] == got[1] == got[2]
+    assert got[0]
 
 
 def test_kcore_early_stop_equals_full_unroll(spark):

@@ -415,14 +415,36 @@ def test_random_projection_zero_exchange(spark, sf_dir, qs):
 
 
 def test_bfs_frontier_joins_broadcast(spark, sf_dir, qs):
-    """Each BFS round joins edges against the (small) frontier — the
-    frontier side must broadcast, never shuffle the edge list."""
+    """Each relax round joins the persisted dst-clustered edges against
+    the (small) frontier, which must broadcast, never shuffle the edge
+    list; and the min/max aggregate on dst rides that clustering — no
+    ENSURE_REQUIREMENTS exchange between the join and the aggregate in
+    the executed plan."""
+    from pyspark.sql import functions as F
+
     from matrix_multiplication_bigdata_ind_assignments_spark.operators import graph as G
 
-    edges = G.trade_edges(spark, sf_dir)
-    seeds = edges.select(edges.src.alias("node")).where("node % 20 = 0").distinct()
-    plan = plan_of(G.bfs_hops(edges, seeds, rounds=1, truncate=False))
-    assert "BroadcastHashJoin" in plan
+    for semiring, agg in (("hops", "min"), ("min_plus", "min"), ("max_min", "max")):
+        if semiring == "hops":
+            edges = G.trade_edges(spark, sf_dir)
+        else:
+            edges = G.trade_edges_weighted(spark, sf_dir)
+        sym = G._relax_edges(edges, semiring)
+        try:
+            state = (
+                G._trade_seeds(edges)
+                .select("node", F.lit(0).cast("long").alias("v"))
+                .localCheckpoint(eager=True)  # as in relax: v is data, not a foldable literal
+            )
+            step = G._relax_round(sym, state, state, semiring)
+            step.collect()  # AQE final plan: the cache's clustering is known here
+            lines = plan_of(step).splitlines()
+        finally:
+            sym.unpersist()
+        top = next(i for i, ln in enumerate(lines) if f"functions=[{agg}(cand" in ln)
+        join = next(i for i in range(top, len(lines)) if "BroadcastHashJoin" in lines[i])
+        assert f"functions=[partial_{agg}(cand" in "\n".join(lines[top:join]), semiring
+        assert not any("Exchange" in ln for ln in lines[top:join]), (semiring, lines[top:join])
 
 
 def test_ship_priority_pushdown_and_topk(spark, sf_dir, qs):

@@ -97,7 +97,7 @@ def main() -> int:
         ns = seeds.count()
         snap0 = settled_snapshot(spark)
         t0 = time.perf_counter()
-        reached = G.bfs_hops(e, seeds).count()
+        reached = G.relax(e, seeds, "hops", G._BFS_ROUNDS).count()
         wall = time.perf_counter() - t0
         d = shuffle_delta(snap0, settled_snapshot(spark))
         mb = d["shuffle_write_bytes"] / 1048576

@@ -139,11 +139,18 @@ AUDIT = {
     "(sequence_pack's kernel): one RangePartitioning exchange on the sort key, a pid-local "
     "window, and the per-partition base offsets return via BroadcastHashJoin — NO "
     "SinglePartition window anywhere",
-    "q_bfs_hops": "frontier-based Pregel BFS: each round joins the edge list against the "
-    "BROADCAST frontier (per-round shuffle O(|frontier|·deg), not O(|V|)) and anti-joins the "
-    "visited set; like q_pagerank the final frame explains as an ExistingRDD scan because "
-    "per-round checkpoints truncate lineage — the round shape is pinned by "
-    "tests/test_plans.py::test_bfs_frontier_joins_broadcast on the truncate=False plan",
+    "q_bfs_hops": "relax('hops'), the one semiring frontier kernel: each round joins the "
+    "persisted, dst-clustered symmetric edge list against the BROADCAST frontier (work "
+    "O(|frontier|·deg), not O(|V|)), takes min(v + 1) on dst riding that clustering (no "
+    "ENSURE_REQUIREMENTS exchange between the join and the aggregate), and folds it into the "
+    "state with ONE full-outer merge, eagerly local-checkpointed; the improved-row count is an "
+    "Observation filled by that checkpoint's own job, so there is no separate probe job.  Like "
+    "q_pagerank the final frame explains as an ExistingRDD scan because per-round checkpoints "
+    "truncate lineage — the round shape is pinned by "
+    "tests/test_plans.py::test_bfs_frontier_joins_broadcast on the per-round step "
+    "(_relax_round) "
+    "(plans/r16/q_bfs_hops_after.txt: 22 jobs, 16.45 MB written at sf0.1 vs 28 jobs, 16.96 MB "
+    "before)",
     "q_random_projection": "ZERO Exchange: scan → one vectorized pandas_udf GEMM per Arrow "
     "batch → map-side posexplode; nothing scales beyond the scan (plan guard asserts no "
     "Exchange node)",
@@ -160,9 +167,11 @@ AUDIT = {
     "q_join_profile": "two map-side-combinable count-aggs + a key-level full-outer "
     "SortMergeJoin + a 1-row closing agg — cost O(distinct keys), the join output itself is "
     "never materialized",
-    "q_widest_path": "same frontier discipline as q_bfs_hops (broadcast improved-set joins, "
-    "visited-set anti-join, per-round checkpoints → final ExistingRDD scan); caps only increase, "
-    "so delta propagation reaches the whole-vector fixpoint the unrolled max-min oracle computes",
+    "q_widest_path": "relax('max_min'): the q_bfs_hops round shape with max(least(v, w)) as "
+    "the aggregate (broadcast improved-set join, aggregate on the edges' dst clustering, one "
+    "checkpointed full-outer merge carrying the fixpoint Observation → final ExistingRDD scan); "
+    "caps only increase, so delta propagation reaches the whole-vector fixpoint the unrolled "
+    "max-min oracle computes",
     "q_word_pmi": "bigrams are per-doc ARRAY algebra (transform over the token array — no window "
     "shuffle, no per-token rows before the one combinable pair-count agg); vocab-sized unigram "
     "tables join back broadcast; the two corpus scalars are 1-row crossJoins; micro-nat PMI is "
@@ -212,10 +221,11 @@ AUDIT = {
     "the event-side probe is a BroadcastHashJoin on event_type with the two hour-range compares "
     "as join residuals — the fact side never shuffles for the interval match; the closing agg's "
     "only two-phase piece is the distinct-user count; no CartesianProduct",
-    "q_shortest_path": "q_pagerank's lineage discipline on the min-plus loop: per-round eager "
-    "checkpoints truncate the frontier recursion, each round is ONE broadcast join (frontier into "
-    "the symmetric edge list) + one map-side-combinable min agg + one anti-join against the "
-    "settled set — per-round shuffle O(|frontier|*deg), never O(|V|*rounds)",
+    "q_shortest_path": "relax('min_plus'): the q_bfs_hops round shape with min(v + w) — one "
+    "broadcast join (frontier into the persisted dst-clustered symmetric edge list), one min "
+    "aggregate riding that clustering, one full-outer merge eagerly checkpointed with the "
+    "fixpoint Observation; after the one-time clustering the edge list never moves, and the "
+    "per-round shuffle is the merge's (the reached rows plus one |V|-row state exchange)",
     "q_classifier_auc": "the classifier DAG keeps its q_quality_classifier contract (vocab-side "
     "broadcast, two combinable hash aggs); the AUC tail adds one distinct-score rollup and a "
     "single-partition ordered walk over THAT ROLLUP only (scores, never docs — the one intended "
