@@ -9,7 +9,7 @@ different summation orders cannot drift across 10 iterations.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -18,6 +18,12 @@ from ..sources import load
 
 _PR_DAMPING = 0.85
 _PR_ITERS = 10
+# pagerank's lineage truncation cadence.  Results are cadence-invariant
+# (the 12-dp rounding is in-plan); each skipped eager checkpoint saves a
+# job and a broadcast round, and 2 is the knee (AB_PAGERANK.md, sf0.1:
+# cadence 1 / 2 / 5 ran 4.80 / 4.12 / 4.01 s mean); deeper cadences trade
+# failure recompute and plan size for little more.
+_PR_TRUNCATE_EVERY = 2
 
 
 def pagerank(
@@ -26,10 +32,9 @@ def pagerank(
     damping: float = _PR_DAMPING,
     iters: int = _PR_ITERS,
     directed: bool = False,
-    tol: float | None = None,
+    seed_mod: int | None = None,
     checkpoint_every: int | None = None,
     join_strategy: str = "broadcast",
-    truncate_every: int = 2,
 ) -> DataFrame:
     """Power-method PageRank over an edge list ``(src, dst)``.
 
@@ -43,41 +48,37 @@ def pagerank(
     is one O(|V|) scalar agg per iteration, rounded to 12 dp so both
     engines agree despite different summation orders.
 
+    ``seed_mod`` picks the teleport: ``None`` (default) is uniform —
+    rank₀ = 1/N, teleport (1−d)/N.  An integer is TrustRank (Gyöngyi et
+    al., VLDB'04): with S seeds ``node % seed_mod == 0``, rank₀ = 1/S on
+    the seeds (0 elsewhere) and teleport (1−d)·rank₀, a function of the
+    node id, so the state needs no weight column.  ``seed_mod=1`` takes
+    the seeded expressions to the uniform result bit-for-bit.  An empty
+    seed set raises ``ValueError``, as does ``directed=True`` (no rule
+    sends dangling mass to the seeds).
+
     Scale shape (the Pregel pattern in DataFrames): each iteration is
     one join of the edge list with the current rank STATE — a |V|-row
     (node, outdeg, rank) vector; folding outdeg into the state replaces
-    the old per-iteration walk⋈deg join + broadcast with a column — plus
+    a per-iteration walk⋈deg join + broadcast with a column — plus
     one hash agg keyed on dst, both map-side combinable.  Lineage is
-    truncated every ``truncate_every`` iterations (default 2 — the
-    measured knee in tools/ab_pagerank_cadence.py: results are cadence-
-    invariant because the 12-dp rounding is in-plan, and each skipped
-    eager materialization saves a scheduled job + broadcast round, ~15%
-    of the 10-iteration wall; deeper cadences trade recompute-on-failure
-    and plan size for little more), otherwise iteration k re-plans all
-    k-1 predecessors.  Ranks are
+    truncated every ``_PR_TRUNCATE_EVERY`` iterations, otherwise
+    iteration k re-plans all k-1 predecessors.  Ranks are
     rounded to 12 dp EACH iteration — the determinism contract that
     makes the unrolled-CTE oracle bit-comparable (summation order
     differs between engines; rounding every round stops drift from
     compounding).
 
-    Robustness knobs (both OFF for the oracle-checked fixed-iteration
-    default):
-
-    - ``tol``: early-stop when max |Δrank| < tol (one extra small join
-      per iteration, only when set).  Because every iterate is 12-dp
-      rounded, a converged vector is a FIXPOINT — further iterations
-      reproduce it bit-identically, so early-stop agrees exactly with
-      fixed-iteration once converged (asserted in tests/test_graph.py).
-    - ``checkpoint_every``: every k-th truncation uses RELIABLE
-      ``.checkpoint()`` (requires ``spark.sparkContext.setCheckpointDir``)
-      instead of ``localCheckpoint`` — localCheckpoint pins blocks to
-      executors, so on a real cluster an executor loss mid-iteration
-      kills the job; a reliable checkpoint cadence
-      bounds recomputation to k iterations.  The knob covers EVERY
-      non-recomputable frame the loop re-reads: the rank iterates AND
-      the static (node, outdeg) vector (the persisted edge list
-      keeps its lineage, so it recomputes on block loss without help).
-      Local runs keep the (faster) localCheckpoint default.
+    ``checkpoint_every`` (OFF for the oracle-checked default): every
+    k-th truncation uses RELIABLE ``.checkpoint()`` (requires
+    ``spark.sparkContext.setCheckpointDir``) instead of
+    ``localCheckpoint`` — localCheckpoint pins blocks to executors, so
+    on a real cluster an executor loss mid-iteration kills the job; a
+    reliable checkpoint cadence bounds recomputation to k iterations.
+    The knob covers EVERY non-recomputable frame the loop re-reads: the
+    rank iterates AND the static (node, outdeg) vector (the persisted
+    edge list keeps its lineage, so it recomputes on block loss without
+    help).  Local runs keep the (faster) localCheckpoint default.
 
     ``join_strategy`` picks how the |V|-row frames (ranks, statics,
     contribs) meet the persisted edge list each iteration:
@@ -105,10 +106,8 @@ def pagerank(
 
     if join_strategy not in ("broadcast", "copartition"):
         raise ValueError(f"unknown join_strategy {join_strategy!r}")
-    if truncate_every < 1:
-        raise ValueError(f"truncate_every must be >= 1, got {truncate_every}")
-    if tol is not None:
-        truncate_every = 1  # the per-iteration delta probe materializes anyway
+    if seed_mod is not None and directed:
+        raise ValueError("pagerank: seed_mod needs an undirected walk (no dangling-mass rule)")
     n_part = int(os.environ.get("MMBD_CC_SHUFFLE_PARTITIONS", "8"))
     # 'copartition': identity instead of the broadcast hint — the rank
     # sides are ExistingRDD scans with no stats, so the planner picks a
@@ -135,27 +134,14 @@ def pagerank(
     # frame re-read by every iteration is exactly the block an executor
     # loss makes unrecoverable.
     statics_clustered = join_strategy == "broadcast" and not checkpoint_every
-    if statics_clustered:
-        statics = statics.persist()
-    elif checkpoint_every:
-        statics = statics.checkpoint(eager=True)
-    else:
-        statics = statics.localCheckpoint(eager=True)
-    n_nodes = statics.count()  # the teleport term needs the scalar
 
     def truncate(df: DataFrame, it: int) -> DataFrame:
-        """Lineage truncation, every ``truncate_every``-th iteration (the
-        final iteration always truncates so the returned frame is an
-        eager checkpoint with no lineage into the unpersisted walk).
-        Results are cadence-invariant — the 12-dp rounding is IN-PLAN,
-        so a 2-iteration lineage computes the identical bits — but each
-        eager materialization is a scheduled job plus a broadcast round,
-        which at fixture scale is most of an iteration's wall time
-        (A/B'd in SCALING.md; cadence is bounded so failure-recompute
-        and plan growth stay O(truncate_every))."""
+        """Lineage truncation, every ``_PR_TRUNCATE_EVERY``-th iteration
+        (the final iteration always truncates so the returned frame is an
+        eager checkpoint with no lineage into the unpersisted walk)."""
         reliable = bool(checkpoint_every) and (it + 1) % checkpoint_every == 0
-        if (it + 1) % truncate_every != 0 and it != iters - 1 and not reliable:
-            return df  # skip: lineage depth stays < truncate_every
+        if (it + 1) % _PR_TRUNCATE_EVERY != 0 and it != iters - 1 and not reliable:
+            return df  # skip: lineage depth stays < _PR_TRUNCATE_EVERY
         if reliable:
             return df.checkpoint(eager=True)
         return df.localCheckpoint(eager=True)
@@ -172,9 +158,27 @@ def pagerank(
     pin = join_strategy == "copartition"
     if pin:
         old_part = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(n_part))
     try:
-        ranks = statics.withColumn("rank", F.lit(1.0 / n_nodes))
+        if statics_clustered:
+            statics = statics.persist()
+        elif checkpoint_every:
+            statics = statics.checkpoint(eager=True)
+        else:
+            statics = statics.localCheckpoint(eager=True)
+        if seed_mod is None:
+            n_nodes = statics.count()  # the teleport term needs the scalar
+            rank0 = F.lit(1.0 / n_nodes)
+            teleport = F.lit((1.0 - damping) / n_nodes)
+        else:
+            seed = F.col("node") % seed_mod == 0
+            n_seeds = statics.where(seed).count()
+            if n_seeds == 0:  # no seed in this graph: the teleport is undefined
+                raise ValueError("pagerank: empty seed set")
+            rank0 = F.when(seed, F.lit(1.0 / n_seeds)).otherwise(F.lit(0.0))
+            teleport = F.lit(1.0 - damping) * rank0
+        if pin:
+            spark.conf.set("spark.sql.shuffle.partitions", str(n_part))
+        ranks = statics.withColumn("rank", rank0)
         for it in range(iters):
             # The rank state (node, outdeg, rank) is a |V|-row frame; its
             # ExistingRDD scan carries no stats, so unhinted the planner
@@ -185,7 +189,7 @@ def pagerank(
                 .groupBy("dst")
                 .agg(F.sum(F.col("rank") / F.col("outdeg")).alias("m"))
             )
-            base = F.lit((1.0 - damping) / n_nodes)
+            base = teleport
             if statics_clustered:
                 joined = statics.join(
                     contribs.hint("merge"), statics.node == contribs.dst, "left"
@@ -206,7 +210,7 @@ def pagerank(
                 )
                 joined = joined.crossJoin(F.broadcast(dang))
                 base = base + (F.lit(damping) * F.col("mmbd_dang")) / F.lit(float(n_nodes))
-            new_ranks = truncate(
+            ranks = truncate(
                 joined.select(
                     "node",
                     "outdeg",
@@ -216,19 +220,6 @@ def pagerank(
                 ),
                 it,
             )
-            if tol is not None:
-                delta = (
-                    new_ranks.join(
-                        ranks.select("node", F.col("rank").alias("prev")), "node"
-                    )
-                    .agg(F.max(F.abs(F.col("rank") - F.col("prev"))).alias("d"))
-                    .first()["d"]
-                )
-                ranks = new_ranks
-                if delta is not None and delta < tol:
-                    break
-            else:
-                ranks = new_ranks
     finally:
         if pin:
             spark.conf.set("spark.sql.shuffle.partitions", old_part)
@@ -706,19 +697,23 @@ def label_prop(edges: DataFrame, rounds: int = _LP_ROUNDS) -> DataFrame:
     label) count agg + one (node) argmax agg.  Label state is
     localCheckpoint'ed per round.
 
-    r12 optimization (guide §2.4: two operations keyed the same way
-    share one exchange): the symmetric edge list is hash-clustered on
-    ``node`` ONCE and persist()ed — persist keeps the repartition node
-    in the plan (localCheckpoint's LogicalRDD forgets outputPartitioning,
-    the graph.pagerank lesson), so the broadcast label join preserves the
-    clustering and BOTH per-round aggregations (the (node, label) vote
-    count AND the per-node argmax) satisfy their distribution from the
-    edges' one-time exchange — zero per-round Exchange over the message
-    volume.  The only per-round shuffle left is the ghost-row union's
-    argmax input (≤|V| partial-agg rows, label-state-sized, not
-    message-sized).  The one-time |E| exchange is amortized over every
-    round; per-round cost drops from 2 AQE exchange stages over the
-    2|E|-row message table to none (plans/r12/q_label_prop_*)."""
+    Invariants:
+
+    - The symmetric edge list is hash-clustered on ``node`` ONCE and
+      persisted (persist keeps the repartition's outputPartitioning; a
+      localCheckpoint forgets it), so the broadcast label join keeps the
+      clustering and BOTH per-round aggregations (the (node, label) vote
+      count and the per-node argmax) ride it: no per-round exchange over
+      the 2|E|-row message volume.  The only per-round shuffle is the
+      ghost-row union's argmax input, ≤ |V| partial-agg rows
+      (plans/r12/q_label_prop_*).
+    - A round that changes no label is a fixpoint: every remaining
+      round is the identity, so stopping there returns the bits of the
+      full fixed-round unroll (and hence of the oracle).  This only skips
+      provably no-op rounds; it is not the convergence-seeking async
+      variant the determinism contract rules out.  The changed-label
+      count is an Observation filled by the round's own eager
+      checkpoint, so the probe costs no job."""
     import os
 
     n_part = int(os.environ.get("MMBD_CC_SHUFFLE_PARTITIONS", "8"))
@@ -748,6 +743,7 @@ def label_prop(edges: DataFrame, rounds: int = _LP_ROUNDS) -> DataFrame:
             aug = votes.unionByName(
                 labels.select("node", "label", F.lit(None).cast("long").alias("cnt"))
             )
+            obs = Observation()
             stepped = (
                 aug.groupBy("node")
                 .agg(
@@ -760,19 +756,11 @@ def label_prop(edges: DataFrame, rounds: int = _LP_ROUNDS) -> DataFrame:
                     F.max(F.when(F.col("cnt").isNull(), F.col("label"))).alias("prev"),
                 )
                 .select("node", F.col("m.label").alias("label"), "prev")
+                .observe(obs, F.count_if(F.col("label") != F.col("prev")).alias("n"))
                 .localCheckpoint(eager=True)
             )
             labels = stepped.select("node", "label")
-            # Convergence short-circuit (VERDICT r10 item 3): if a synchronous
-            # round changed NO label, every remaining round is the identity, so
-            # stopping early returns a result bit-identical to the full
-            # fixed-round unroll (and hence to the oracle) — this is NOT the
-            # convergence-seeking async variant the determinism contract rules
-            # out, just skipping provably-no-op rounds.  The change count rides
-            # the round's own eager checkpoint: the prev-label join is folded
-            # into the round's plan, and the delta probe below scans the
-            # already-materialized checkpoint blocks (no extra shuffle).
-            if stepped.where(F.col("label") != F.col("prev")).isEmpty():
+            if not obs.get["n"]:  # no label changed: fixpoint
                 break
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old_part)
@@ -909,27 +897,26 @@ def kcore(edges: DataFrame, k: int = _KCORE_K, rounds: int = _KCORE_ROUNDS) -> D
     standard distributed peeling: O(rounds) passes, each linear in the
     surviving edges.
 
-    Early stop (r12): the per-round degree table is materialized and
-    probed — if NO vertex sits below the bound, peeling has reached its
-    monotone fixpoint: this round (and every remaining one) removes
-    nothing, and the degree table itself IS the answer the closing agg
-    would recompute, so it is returned directly.  Identical rows to the
-    full fixed unroll (the label_prop short-circuit discipline; peeling
-    is monotone, post-fixpoint rounds are identities) — asserted in
-    tests/test_graph.py::test_kcore_fixpoint_margin, and the probe swaps
-    the old per-round ``keep`` checkpoint for a ``deg`` checkpoint (same
-    count of materializations per non-fixpoint round; ``keep`` becomes a
-    cheap filter over the materialized degree blocks)."""
+    Fixpoint: a round whose degree table has NO vertex below the bound
+    removes nothing, and so does every later round (peeling is
+    monotone); that degree table IS the answer the closing agg would
+    recompute, so it is returned directly, with the rows of the full
+    fixed unroll (tests/test_graph.py::test_kcore_fixpoint_margin).  The
+    below-bound count is an Observation filled by the degree table's own
+    eager checkpoint, so the probe costs no job, and ``keep`` is a
+    filter over the materialized degree blocks."""
     live = edges.localCheckpoint(eager=True)
     for _ in range(rounds):
+        obs = Observation()
         deg = (
             live.select(F.col("u").alias("node"))
             .unionAll(live.select(F.col("v").alias("node")))
             .groupBy("node")
             .agg(F.count(F.lit(1)).alias("d"))
+            .observe(obs, F.count_if(F.col("d") < k).alias("n"))
             .localCheckpoint(eager=True)
         )
-        if deg.where(F.col("d") < k).isEmpty():
+        if not obs.get["n"]:
             # fixpoint: every surviving vertex already has degree >= k,
             # so the final count-agg over live would reproduce deg exactly
             return deg.select("node", F.col("d").cast("long").alias("core_deg"))
@@ -1212,8 +1199,6 @@ def relax(edges: DataFrame, seeds: DataFrame, semiring: str, rounds: int) -> Dat
     with the flat checkpoint).
     Swap localCheckpoint for a reliable checkpoint cadence on a cluster
     that can lose executors."""
-    from pyspark.sql import Observation
-
     seed = _SEMIRINGS[semiring][3]
     sym = _relax_edges(edges, semiring)
     state = seeds.select("node", F.lit(seed).cast("long").alias("v")).localCheckpoint(eager=True)

@@ -23,13 +23,13 @@ CTEs (each iterate is referenced twice — materialization keeps the
 unrolled plan linear, matching Spark's per-round localCheckpoint).
 
 Scale shape (= q_pagerank's broadcast arm): the static directed edge
-list is hash-clustered on src once and persisted; each round exchanges
-only the |V|-row score vectors (broadcast joins against the resident
-edges — zero edge movement), the two norm scalars are 1-row broadcast
-crossJoins (in-plan, no collect), and each half-round's raw vector is
-eagerly materialized (see `hits` for why that cadence is forced here,
-unlike pagerank's knob).  The copartition fallback for rank vectors
-too big to broadcast is the same switch documented on `pagerank`
+list is persisted twice, hash-clustered on src and on dst; the |V|-row
+score vectors are broadcast against the resident edges (zero edge
+movement), the two norms are in-plan windows (no collect), and each
+round's hub vector is eagerly materialized (see `hits` for why that
+cadence is forced here, unlike pagerank's every-2nd-iteration
+truncation).  The copartition fallback for rank vectors too big to
+broadcast is the same switch documented on `pagerank`
 (operators/graph.py) and applies identically — the state here is two
 doubles per node instead of one.
 """
@@ -68,24 +68,24 @@ def hits(
     eager localCheckpoint of the |V|-row hub vector per round bounds
     lineage to a single round.
 
-    r13: the norm is computed as a WINDOW aggregate over the raw
-    contribution vector (empty partition spec — all |V| rows meet in
-    one partition, a |V|-row exchange) instead of a separate 1-row agg
-    + crossJoin(broadcast).  Why this matters after r12 removed the
-    per-round agg exchanges: the old shape referenced araw/hraw twice
-    (norm subtree + divide subtree) and relied on EXCHANGE REUSE to
-    dedup them — with the aggregates now exchange-free there is no
-    exchange to reuse, so each half-round's edge join + agg executed
-    TWICE per round (4 edge joins/round, visible as the residual ~9 s
-    wall with near-zero shuffle).  The window form references each raw
-    vector exactly ONCE (2 edge joins/round) and drops 2 of the 4
-    broadcast-build waves per round.  Summation order inside the window
-    differs from the hash-agg order, which is within the 12-dp
-    round-after-every-aggregate contract (the same contract that lets
-    DuckDB's summation order match at all); re-verified against the
-    unrolled oracle at sf0.001/0.01/0.1.  Only score vectors are ever
-    exchanged/materialized — the edge list stays resident and is never
-    moved (broadcast joins on both steps).
+    Plan invariants:
+
+    - Two resident copies of the distinct edge list, clustered on src
+      (``ed``) and on dst (``ed_dst``): the auth step aggregates on dst
+      and the hub step on src, each riding its copy's clustering, so
+      neither half-round exchanges the contribution vector or the edges.
+    - The L2 norm is a WINDOW aggregate over the raw contribution
+      vector (empty partition spec: a |V|-row single-partition
+      exchange), so each raw vector is referenced ONCE — one edge join +
+      agg per half-round.  A 1-row agg + crossJoin would reference it
+      twice, and with exchange-free aggregates there is no exchange for
+      reuse to share, so the edge join would run twice.  The window's
+      summation order is covered by the 12-dp round-after-every-
+      aggregate contract.
+    - No exchange is planned at the session's shuffle partition count
+      (the edge copies carry explicit clustering; the window is a
+      single-partition exchange), so the loop never writes session conf
+      and its output does not depend on that count.
 
     Score frames carry only the NONZERO side each round (nodes absent
     from ``hub`` contribute nothing to the next auth sum — identical
@@ -94,22 +94,12 @@ def hits(
     end."""
     import os
 
-    n_part = os.environ.get("MMBD_CC_SHUFFLE_PARTITIONS", "8")
-    # r12: repartition BEFORE distinct — the dedup rides the one-time
-    # src-clustering exchange instead of paying its own (set-identical;
-    # the graph.pagerank move).
-    ed = edges.select("src", "dst").repartition(int(n_part), "src").distinct().persist()
-    # r12 (guide §2.4): a SECOND resident copy clustered on dst.  The
-    # mutual recursion aggregates on BOTH endpoints every round — hub
-    # rides ed's src-clustering, but auth's groupBy(dst) paid a fresh
-    # exchange per round (10 AQE shuffle stages over the contribution
-    # vector).  Keeping a dst-clustered twin makes BOTH half-round aggs
-    # exchange-free: per-round shuffle drops to ZERO, at the one-time
-    # cost of one more |E| exchange + a second resident copy (the
-    # broadcast arm already keeps edges resident; at copartition scale
-    # the twin is the same O(|E|) storage class).  Derived FROM ed (not
-    # the raw input) so the dedup work is not repeated.
-    ed_dst = ed.repartition(int(n_part), "dst").persist()
+    n_part = int(os.environ.get("MMBD_CC_SHUFFLE_PARTITIONS", "8"))
+    # repartition BEFORE distinct: the dedup rides the one clustering
+    # exchange instead of paying its own
+    ed = edges.select("src", "dst").repartition(n_part, "src").distinct().persist()
+    # the dst-clustered twin, derived from ed so the dedup is not repeated
+    ed_dst = ed.repartition(n_part, "dst").persist()
     nodes = (
         ed.select(F.col("src").alias("node"))
         .unionByName(ed.select(F.col("dst").alias("node")))
@@ -117,15 +107,10 @@ def hits(
         .localCheckpoint(eager=True)
     )
 
-    old_part = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", n_part)
     try:
         from pyspark.sql.window import Window
 
-        # the L2 norm as a window over the raw vector: one reference to
-        # araw/hraw per round (see docstring — the post-r12 double-compute
-        # fix), |V| rows through a single-partition window exchange
-        wall = Window.partitionBy()
+        wall = Window.partitionBy()  # the L2 norms (see the invariants above)
         hub = nodes.select("node", F.lit(1.0).alias("hub"))
         auth = None
         for it in range(iters):
@@ -174,7 +159,6 @@ def hits(
             .localCheckpoint(eager=True)
         )
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_part)
         ed_dst.unpersist()
         ed.unpersist()
     return state

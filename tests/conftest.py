@@ -34,3 +34,14 @@ def sf_dir():
 def rows_set(df):
     """Order-insensitive canonical form of a DataFrame result."""
     return sorted(tuple(r) for r in df.collect())
+
+
+def count_jobs(spark, group, thunk):
+    """Spark jobs ``thunk()`` launches, counted by job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        thunk()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc._jsc.clearJobGroup()

@@ -5,6 +5,8 @@ from pyspark.sql import functions as F
 
 from matrix_multiplication_bigdata_ind_assignments_spark.operators import graph as G
 
+from conftest import count_jobs
+
 
 def _trade_edges(spark, sf_dir):
     """The q_pagerank edge list — the SHARED recipe (G.trade_edges, one
@@ -62,39 +64,26 @@ def test_pagerank_directed_dangling_fixture(spark):
     assert ranks[3] > ranks[2] > ranks[1]
 
 
-def test_pagerank_early_stop_agrees_with_fixed(spark):
-    """tol-based early stop must agree with the fixed-iteration run:
-    12-dp per-round rounding makes a converged vector a FIXPOINT, so
-    extra iterations reproduce it bit-identically."""
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (4, 1), (1, 3)], "src long, dst long"
-    )
-    fixed = sorted(
-        tuple(r) for r in G.pagerank(spark, edges, iters=40).collect()
-    )
-    early = sorted(
-        tuple(r) for r in G.pagerank(spark, edges, iters=40, tol=1e-13).collect()
-    )
-    assert fixed == early
-
-
-@pytest.mark.parametrize("directed", [False, True])
-def test_pagerank_copartition_agrees_with_broadcast(spark, sf_dir, directed):
+@pytest.mark.parametrize(
+    "directed, seed_mod",
+    [
+        pytest.param(False, None, id="False"),
+        pytest.param(True, None, id="True"),
+        pytest.param(False, 20, id="trustrank"),
+    ],
+)
+def test_pagerank_copartition_agrees_with_broadcast(spark, sf_dir, directed, seed_mod):
     """join_strategy='copartition' (the billion-node arm: shuffled joins
     re-using the persisted src-clustered edges, no broadcast of the rank
-    vector) must produce bit-identical 12-dp ranks to the broadcast arm
-    — the per-iteration rounding already absorbs summation-order
-    differences across ENGINES, a stronger condition than across join
-    strategies (VERDICT r7 item 3)."""
+    vector) must produce bit-identical 12-dp ranks to the broadcast arm,
+    uniform or seeded teleport — the per-iteration rounding already
+    absorbs summation-order differences across ENGINES, a stronger
+    condition than across join strategies (VERDICT r7 item 3)."""
     edges = _trade_edges(spark, sf_dir)
-    b = sorted(
-        tuple(r) for r in G.pagerank(spark, edges, directed=directed).collect()
-    )
+    kw = {"directed": directed, "seed_mod": seed_mod}
+    b = sorted(tuple(r) for r in G.pagerank(spark, edges, **kw).collect())
     c = sorted(
-        tuple(r)
-        for r in G.pagerank(
-            spark, edges, directed=directed, join_strategy="copartition"
-        ).collect()
+        tuple(r) for r in G.pagerank(spark, edges, join_strategy="copartition", **kw).collect()
     )
     assert b == c
 
@@ -193,14 +182,7 @@ def test_pagerank_query_job_count_bounded(spark, sf_dir):
     """One q_pagerank call (plan build + collect) stays within two jobs of
     the setup-from-the-walk count.  The setup's extra jobs are invisible
     to the loop-only byte envelopes; the job count sees them."""
-    sc = spark.sparkContext
-    group = "test:pagerank-jobs"
-    sc.setJobGroup(group, group)
-    try:
-        G.q_pagerank(spark, sf_dir).collect()
-        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-    finally:
-        sc._jsc.clearJobGroup()
+    jobs = count_jobs(spark, "test:pagerank-jobs", lambda: G.q_pagerank(spark, sf_dir).collect())
     assert jobs <= _PAGERANK_JOBS_SF0001 + 2, jobs
 
 
@@ -652,14 +634,8 @@ _PATH_JOBS_SF0001 = {"q_bfs_hops": 23, "q_widest_path": 30, "q_shortest_path": 2
 def test_path_query_job_count_bounded(spark, sf_dir, query):
     """One call of each relax-backed query (plan build + collect) stays
     within two jobs of the probe-free count."""
-    sc = spark.sparkContext
-    group = f"test:{query}-jobs"
-    sc.setJobGroup(group, group)
-    try:
-        getattr(G, query)(spark, sf_dir).collect()
-        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-    finally:
-        sc._jsc.clearJobGroup()
+    run = getattr(G, query)
+    jobs = count_jobs(spark, f"test:{query}-jobs", lambda: run(spark, sf_dir).collect())
     assert jobs <= _PATH_JOBS_SF0001[query] + 2, jobs
 
 
@@ -705,3 +681,28 @@ def test_kcore_early_stop_equals_full_unroll(spark):
         "node", "core_deg"
     ]
     assert dict(G.kcore(df, k=4, rounds=6).dtypes)["core_deg"] == "bigint"
+
+
+# jobs one q_label_prop call launches at sf0.001 (the changed-label count
+# rides each round's checkpoint as an Observation); a separate isEmpty
+# probe per round launched 24
+_LP_JOBS_SF0001 = 21
+# jobs kcore(k=2) launches on a 7-node path, which peels for 3 rounds and
+# then observes the empty fixpoint (the below-bound count rides each
+# degree checkpoint); a separate isEmpty probe per round launched 25
+_KCORE_PATH_JOBS = 21
+
+
+def test_label_prop_query_job_count_bounded(spark, sf_dir):
+    """One q_label_prop call (plan build + collect) stays within two jobs
+    of the probe-free count."""
+    jobs = count_jobs(spark, "test:lp-jobs", lambda: G.q_label_prop(spark, sf_dir).collect())
+    assert jobs <= _LP_JOBS_SF0001 + 2, jobs
+
+
+def test_kcore_job_count_bounded(spark):
+    """A multi-round peel stays within two jobs of the probe-free count:
+    each round's fixpoint probe costs no job of its own."""
+    path = spark.createDataFrame([(100 + i, 101 + i) for i in range(6)], "u long, v long")
+    jobs = count_jobs(spark, "test:kcore-jobs", lambda: G.kcore(path, k=2, rounds=6).collect())
+    assert jobs <= _KCORE_PATH_JOBS + 2, jobs

@@ -107,3 +107,27 @@ def test_hits_loop_shuffle_is_score_sized(spark, sf_dir):
     per_iter = (per[11] - per[1]) / 10
     assert per[1] > 0, per
     assert per_iter <= 0.2 * 29_118, per
+
+
+def test_hits_invariant_to_shuffle_partitions(spark, sf_dir, monkeypatch):
+    """Scores must not depend on the session's shuffle partition count,
+    and hits never writes session conf: its edge copies carry explicit
+    clustering and its norm window is a single-partition exchange."""
+    import pytest
+    from pyspark.sql.conf import RuntimeConfig
+
+    edges = trade_edges(spark, sf_dir).localCheckpoint(eager=True)
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    got = []
+    try:
+        for parts in (1, 8, 64):
+            spark.conf.set(key, str(parts))
+            with monkeypatch.context() as m:
+                m.setattr(RuntimeConfig, "set", lambda *a: pytest.fail("operator set a conf"))
+                got.append(sorted(tuple(r) for r in hits(spark, edges).collect()))
+            assert spark.conf.get(key) == str(parts)
+    finally:
+        spark.conf.set(key, old)
+    assert got[0] == got[1] == got[2]
+    assert got[0]

@@ -1,28 +1,26 @@
-"""TrustRank / personalized PageRank (operators/ppr.py)."""
+"""TrustRank / personalized PageRank: graph.pagerank with ``seed_mod``
+(operators/ppr.py registers q_trustrank on it)."""
 
 import sys
 
 import pytest
-from pyspark.sql import functions as F
 
 sys.path.insert(0, "/root/repo")
 
 from matrix_multiplication_bigdata_ind_assignments_spark.operators.graph import _decode_ranks, pagerank, trade_edges  # noqa: E402
-from matrix_multiplication_bigdata_ind_assignments_spark.operators.ppr import (  # noqa: E402
-    _SEED_MOD,
-    personalized_pagerank,
-)
+from matrix_multiplication_bigdata_ind_assignments_spark.operators.ppr import _SEED_MOD, q_trustrank  # noqa: E402
 
-from conftest import rows_set  # noqa: E402
+from conftest import count_jobs, rows_set  # noqa: E402
 
 
 def test_uniform_seed_set_reproduces_pagerank(spark, sf_dir):
-    """seed_mod=1 makes every node a seed with weight 1/n — the update
-    collapses to uniform PageRank, and the 12-dp per-round rounding must
-    make the two implementations bit-identical (same recipe that makes
-    the unrolled-CTE oracles comparable)."""
+    """seed_mod=1 makes every node a seed with weight 1/n — the seeded
+    teleport expression (1−d)·when(seed, 1/n) collapses to the uniform
+    scalar (1−d)/n, and the 12-dp per-round rounding must make the two
+    expressions bit-identical (same recipe that makes the unrolled-CTE
+    oracles comparable)."""
     edges = trade_edges(spark, sf_dir)
-    ppr = rows_set(_decode_ranks(personalized_pagerank(spark, edges, seed_mod=1)))
+    ppr = rows_set(_decode_ranks(pagerank(spark, edges, seed_mod=1)))
     pr = rows_set(_decode_ranks(pagerank(spark, trade_edges(spark, sf_dir))))
     assert ppr == pr
 
@@ -32,7 +30,7 @@ def test_trustrank_mass_and_teleport_floor(spark, sf_dir):
     accumulation).  Every seed holds at least its teleport floor
     (1−d)·1/|S| — exact from the update since the contribution term is
     non-negative."""
-    ranks = personalized_pagerank(spark, trade_edges(spark, sf_dir)).collect()
+    ranks = pagerank(spark, trade_edges(spark, sf_dir), seed_mod=_SEED_MOD).collect()
     total = sum(r["rank"] for r in ranks)
     assert abs(total - 1.0) < 1e-6, total
     seeds = [r for r in ranks if r["node"] % _SEED_MOD == 0]
@@ -46,7 +44,7 @@ def test_trustrank_empty_seed_set_raises(spark):
     zero vector."""
     edges = spark.createDataFrame([(1, 3), (3, 5)], ["src", "dst"])
     with pytest.raises(ValueError, match="empty seed set"):
-        personalized_pagerank(spark, edges)  # odd ids only: none % 20 == 0
+        pagerank(spark, edges, seed_mod=_SEED_MOD)  # odd ids only: none % 20 == 0
 
 
 def test_trustrank_invariant_to_shuffle_partitions(spark, sf_dir, monkeypatch):
@@ -64,8 +62,28 @@ def test_trustrank_invariant_to_shuffle_partitions(spark, sf_dir, monkeypatch):
             spark.conf.set(key, str(parts))
             with monkeypatch.context() as m:
                 m.setattr(RuntimeConfig, "set", lambda *a: pytest.fail("operator set a conf"))
-                got.append(rows_set(personalized_pagerank(spark, edges)))
+                got.append(rows_set(pagerank(spark, edges, seed_mod=_SEED_MOD)))
             assert spark.conf.get(key) == str(parts)
     finally:
         spark.conf.set(key, old)
     assert got[0] == got[1] == got[2]
+
+
+def test_trustrank_directed_raises(spark):
+    """No rule sends a directed walk's dangling mass to the seeds, so a
+    seeded directed run must refuse instead of leaking mass."""
+    edges = spark.createDataFrame([(20, 3), (3, 40)], "src long, dst long")
+    with pytest.raises(ValueError, match="seed_mod"):
+        pagerank(spark, edges, directed=True, seed_mod=_SEED_MOD)
+
+
+# jobs one q_trustrank call launches at sf0.001: q_pagerank's 25, the
+# seed count standing in for the node count
+_TRUSTRANK_JOBS_SF0001 = 25
+
+
+def test_trustrank_query_job_count_bounded(spark, sf_dir):
+    """One q_trustrank call (plan build + collect) stays within two jobs
+    of q_pagerank's count: the seeded teleport adds no job."""
+    jobs = count_jobs(spark, "test:trustrank-jobs", lambda: q_trustrank(spark, sf_dir).collect())
+    assert jobs <= _TRUSTRANK_JOBS_SF0001 + 2, jobs

@@ -274,9 +274,10 @@ AUDIT = {
     "lattice levels in a single shuffle pass over events; the per-level audit agg runs over "
     "QI-cell counts (|cells| rows), never re-scanning events",
     "q_hits": "like q_pagerank the final frame explains as an ExistingRDD scan — the 10 "
-    "mutual-recursion rounds (auth join+agg, hub join+agg, two 1-row norm crossJoins each) ran "
-    "against the resident src-clustered edge list with every score-vector side broadcast; per-round "
-    "exchange is O(|V|) twice over, zero edge movement, norms in-plan (no collect)",
+    "mutual-recursion rounds (auth join+agg on the resident dst-clustered edge copy, hub join+agg "
+    "on the src-clustered copy, one single-partition window norm each) ran with every "
+    "score-vector side broadcast: zero edge movement, no exchange planned at the session "
+    "partition count (the loop writes no session conf), norms in-plan (no collect)",
     "q_assortativity": "one distinct + two BROADCAST degree joins + a single combinable moment "
     "agg (six DECIMAL(38,0) sums) — nothing after the first exchange scales with |E|; the Newman "
     "formula's 128-bit products and the closing divide are all in the one-row tail",
