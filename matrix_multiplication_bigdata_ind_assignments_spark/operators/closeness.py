@@ -40,14 +40,13 @@ wrong-together.
 from __future__ import annotations
 
 import math
-import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..registry import register
-from .graph import _unroll_stability_check, symmetric, trade_edges
+from .graph import _unroll_stability_check, loop_partitions, symmetric, trade_edges
 
 _CL_ROUNDS = 6  # fixed unroll; the trade graph settles in <=3 (dense bipartite)
 _CL_SEED_MOD = 20  # landmarks = trusted suppliers (node % 20 == 0), ~10% of suppliers
@@ -73,7 +72,8 @@ def landmark_harmonic(
     ``bit_or`` aggregate of the frontier words arriving over the
     symmetric edges (cm), one full-outer merge with the state
     (s' = s | cm, f' = cm & ~s, acc' = acc + popcount(f')·Lc/r), one
-    local checkpoint and one empty-frontier probe.
+    local checkpoint, whose own job fills the empty-frontier probe (an
+    Observation counting the rows with f ≠ 0).
 
     ``join_strategy``:
 
@@ -99,7 +99,7 @@ def landmark_harmonic(
             f"exact harmonic numerator |L|·lcm(1..rounds) can overflow a BIGINT"
         )
     lc = math.lcm(*range(1, rounds + 1))
-    n_part = int(os.environ.get("MMBD_CC_SHUFFLE_PARTITIONS", "8"))
+    n_part = loop_partitions()
     ck = lambda df: df.localCheckpoint(eager=True)  # noqa: E731
     sym = symmetric(edges)
     if join_strategy == "copartition":
@@ -138,6 +138,7 @@ def landmark_harmonic(
                 .groupBy(F.col("dst").alias("node"), "wi")
                 .agg(F.bit_or("m").alias("cm"))
             )
+            obs = Observation()
             state = ck(
                 state.join(cand, ["node", "wi"], "full")
                 .select(
@@ -154,8 +155,9 @@ def landmark_harmonic(
                     F.expr("cm & ~s0").alias("f"),
                     F.expr(f"acc + bit_count(cm & ~s0) * {lc // r}L").alias("acc"),
                 )
+                .observe(obs, F.count_if(F.col("f") != 0).alias("n"))
             )
-            if r < rounds and state.where(F.col("f") != 0).isEmpty():
+            if not obs.get["n"]:
                 break  # level-set fixpoint: remaining rounds reach nothing
     finally:
         if join_strategy == "copartition":

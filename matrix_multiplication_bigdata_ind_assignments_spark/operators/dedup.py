@@ -16,6 +16,7 @@ from pyspark.sql.window import Window
 
 from ..registry import register
 from ..sources import load
+from .graph import loop_partitions, relax, symmetric
 
 # Portable hashing convention used throughout: first 8 hex chars of an
 # md5 as an integer — Spark conv(hex,16,10), DuckDB ('0x'||hex)::BIGINT —
@@ -1031,103 +1032,42 @@ def fuzzy_candidates(names: DataFrame, cap: int) -> DataFrame:
     )
 
 
-def connected_components(spark: SparkSession, pairs: DataFrame, a: str, b: str) -> DataFrame:
+# round cap of min-label propagation and of the star contraction: LSH
+# cliques settle in 2-3 propagation rounds, a chain needs one per hop
+_CC_ROUNDS = 50
+
+
+def connected_components(pairs: DataFrame, a: str, b: str) -> DataFrame:
     """component_labels aggregated to groups: (comp, n_members,
     keeper_id) with keeper = min doc_id per component."""
-    labels = component_labels(spark, pairs, a, b)
+    labels = component_labels(pairs, a, b)
     return labels.groupBy("comp").agg(
         F.count(F.lit(1)).alias("n_members"), F.min("doc_id").alias("keeper_id")
     )
 
 
-def component_labels(spark: SparkSession, pairs: DataFrame, a: str, b: str) -> DataFrame:
-    """Min-label propagation to a fixpoint over an undirected pair list —
-    the canonical DataFrame-native iterative algorithm (SURVEY.md's
-    'iterative algorithms' rows-only class).  Deterministic; bounded by
-    graph diameter.  At 100 TB each iteration is one shuffle keyed on the
-    node id, and the candidate graph is orders of magnitude smaller than
-    the corpus.  Returns the PER-NODE labels (doc_id, comp) — consumed
-    by connected_components' group rollup and by q_dedup_keep_best's
-    quality-argmax keeper selection."""
-    pairs = pairs.select(a, b).localCheckpoint(eager=True)
-    # undirected edge list; consumed once per fixpoint round —
-    # localCheckpoint (GC-scoped), not .cache() (session-scoped), so
-    # nothing persists after the query
-    edges = (
-        pairs.select(F.col(a).alias("src"), F.col(b).alias("dst"))
-        .unionByName(pairs.select(F.col(b).alias("src"), F.col(a).alias("dst")))
-        .localCheckpoint(eager=True)
+def component_labels(pairs: DataFrame, a: str, b: str) -> DataFrame:
+    """Min-label propagation to a fixpoint over an undirected pair list:
+    ``graph.relax`` under its ``min_label`` semiring, seeded with every
+    endpoint labeled by its own id.  Deterministic; the rounds are bounded
+    by the graph diameter, and a graph deeper than ``_CC_ROUNDS`` raises
+    instead of returning partial groups (connected_components_star is
+    diameter-independent).  Each round works on the candidate graph,
+    orders of magnitude smaller than the corpus.  Returns the PER-NODE
+    labels (doc_id, comp) — consumed by connected_components' group
+    rollup and by q_dedup_keep_best's quality-argmax keeper selection."""
+    # checkpointed once: the seed set and the relaxation edges both read it
+    edges = pairs.select(F.col(a).alias("src"), F.col(b).alias("dst"))
+    edges = edges.localCheckpoint(eager=True)
+    # the distinct rides an explicit clustering, not the session's count
+    seeds = (
+        symmetric(edges).select(F.col("src").alias("node"))
+        .repartition(loop_partitions(), "node")
+        .distinct()
     )
-    # the label table is |V(candidate graph)| rows — orders of magnitude
-    # smaller than the corpus — so the per-iteration shuffles are pinned to
-    # a few partitions (the driver's vanilla session defaults to 200, which
-    # makes each tiny fixpoint round pay 200-task scheduling overhead);
-    # at real scale raise MMBD_CC_SHUFFLE_PARTITIONS to ~|V|/256MB
-    import os
-
-    n_part = os.environ.get("MMBD_CC_SHUFFLE_PARTITIONS", "8")
-    old_part = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", n_part)
-    try:
-        labels = (
-            edges.select(F.col("src").alias("doc_id"))
-            .distinct()
-            .withColumn("comp", F.col("doc_id"))
-            .localCheckpoint(eager=True)
-        )
-        # run to convergence: LSH cliques converge in 2-3 rounds, but
-        # threshold graphs (q_dedup_semantic_groups) can chain — diameter
-        # bounds the rounds, the cap is a runaway guard.  At 100 TB scale
-        # swap plain propagation for the large-star/small-star contraction
-        # (O(log n) rounds) — same labels, fewer shuffles.
-        max_iters = int(os.environ.get("MMBD_CC_MAX_ITERS", "50"))
-        for it in range(max_iters):
-            neigh = (
-                edges.join(labels, edges.dst == labels.doc_id)
-                .groupBy("src")
-                .agg(F.min("comp").alias("neigh_comp"))
-            )
-            # carry the old label through the merge so convergence is read off
-            # the SAME materialization (no extra action per round), and
-            # localCheckpoint truncates lineage — otherwise each iteration
-            # re-plans every prior round and the fixpoint goes quadratic.
-            # (Deliberately NO per-round pointer-jumping: the nested
-            # self-joins it needs plan as stacked broadcast exchanges whose
-            # build futures starve the exchange pool after a few rounds —
-            # measured: identical 4-join plans go 1s → 9s → never returns.
-            # The O(log n) round count at 100 TB comes from the
-            # large-star/small-star edge contraction instead, which keeps
-            # one join per round.)
-            merged = (
-                labels.join(neigh, labels.doc_id == neigh.src, "left")
-                .select(
-                    "doc_id",
-                    F.col("comp").alias("comp_old"),
-                    F.least(F.col("comp"), F.coalesce(F.col("neigh_comp"), F.col("comp"))).alias("comp"),
-                )
-                .localCheckpoint(eager=True)
-            )
-            labels = merged.select("doc_id", "comp")
-            # the convergence count is an extra job per round; probing every
-            # 3rd round trades ≤2 wasted (cheap, converged) rounds for a
-            # third of the actions — labels only ever decrease, so a stale
-            # probe can never mis-converge
-            if it % 3 == 2 or it == max_iters - 1:
-                if merged.where(F.col("comp") != F.col("comp_old")).count() == 0:
-                    break
-        else:
-            # a silently-unconverged fixpoint returns WRONG groups (a
-            # 200-deep chain needs 200 single-hop rounds); fail loud and
-            # point at the diameter-independent algorithm
-            raise RuntimeError(
-                f"connected_components did not converge in {max_iters} rounds "
-                "(graph diameter exceeds the cap); use "
-                "connected_components_star (large-star/small-star, "
-                "diameter-independent) or raise MMBD_CC_MAX_ITERS"
-            )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_part)
-    return labels
+    return relax(edges, seeds, "min_label", _CC_ROUNDS).select(
+        F.col("node").alias("doc_id"), F.col("v").alias("comp")
+    )
 
 
 def connected_components_star(
@@ -1139,10 +1079,10 @@ def connected_components_star(
     the 100 TB path where plain min-label propagation pays O(diameter)
     rounds.  Each round is two groupBy-min + join passes over the edge
     list; joins are hinted shuffle_hash so no broadcast-build stack forms
-    across rounds (stacked broadcast futures starve the exchange pool —
-    see connected_components).  Returns (comp, n_members, keeper_id),
+    across rounds (stacked broadcast futures starve the exchange pool:
+    identical 4-join plans measured 1 s → 9 s → never returned).
+    Returns (comp, n_members, keeper_id),
     identical to connected_components (property-tested equivalent)."""
-    import os
 
     def canon(e: DataFrame) -> DataFrame:
         # canonical (hi, lo) direction, no self-loops, deduped
@@ -1181,13 +1121,11 @@ def connected_components_star(
         pairs.select(F.col(a).alias("u"), F.col(b).alias("v"))
     ).localCheckpoint(eager=True)
 
-    n_part = os.environ.get("MMBD_CC_SHUFFLE_PARTITIONS", "8")
     old_part = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", n_part)
+    spark.conf.set("spark.sql.shuffle.partitions", str(loop_partitions()))
     try:
-        max_rounds = int(os.environ.get("MMBD_CC_MAX_ITERS", "50"))
         prev_n = edges.count()
-        for rnd in range(max_rounds):
+        for rnd in range(_CC_ROUNDS):
             if stats is not None:
                 stats["rounds"] = rnd + 1  # rounds actually executed
             prev = edges
@@ -1203,8 +1141,8 @@ def connected_components_star(
             prev_n = n
         else:
             raise RuntimeError(
-                f"connected_components_star did not converge in {max_rounds} "
-                "rounds; raise MMBD_CC_MAX_ITERS"
+                f"connected_components_star did not converge in {_CC_ROUNDS} "
+                "rounds; raise _CC_ROUNDS"
             )
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old_part)
@@ -1259,7 +1197,7 @@ def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components over the MinHash-LSH candidate graph — the
     step that turns pairwise matches into dedup groups (see
     connected_components for the fixpoint machinery)."""
-    return connected_components(spark, q_dedup_minhash(spark, sf_dir), "da", "db")
+    return connected_components(q_dedup_minhash(spark, sf_dir), "da", "db")
 
 
 from .text import _STOPWORDS as _KB_STOPWORDS  # noqa: E402  (shared quality vocabulary)
@@ -1329,7 +1267,7 @@ def q_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents").select(
         "doc_id", quality_expr_6dp().alias("quality")
     )
-    labels = component_labels(spark, q_dedup_minhash(spark, sf_dir), "da", "db")
+    labels = component_labels(q_dedup_minhash(spark, sf_dir), "da", "db")
     dl = (
         docs.join(
             F.broadcast(labels.withColumnRenamed("comp", "lcomp")), "doc_id", "left"

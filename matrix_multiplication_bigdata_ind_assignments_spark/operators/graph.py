@@ -9,6 +9,8 @@ different summation orders cannot drift across 10 iterations.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -24,6 +26,14 @@ _PR_ITERS = 10
 # cadence 1 / 2 / 5 ran 4.80 / 4.12 / 4.01 s mean); deeper cadences trade
 # failure recompute and plan size for little more.
 _PR_TRUNCATE_EVERY = 2
+
+
+def loop_partitions() -> int:
+    """Partition count of the loop operators' explicit clusterings
+    (``MMBD_CC_SHUFFLE_PARTITIONS``, default 8): their state and edge
+    frames are small next to the inputs they come from; raise it to about
+    |V|/256 MB at scale."""
+    return int(os.environ.get("MMBD_CC_SHUFFLE_PARTITIONS", "8"))
 
 
 def pagerank(
@@ -102,13 +112,11 @@ def pagerank(
     count.  The broadcast arm never writes session conf.
 
     Returns (node, rank)."""
-    import os
-
     if join_strategy not in ("broadcast", "copartition"):
         raise ValueError(f"unknown join_strategy {join_strategy!r}")
     if seed_mod is not None and directed:
         raise ValueError("pagerank: seed_mod needs an undirected walk (no dangling-mass rule)")
-    n_part = int(os.environ.get("MMBD_CC_SHUFFLE_PARTITIONS", "8"))
+    n_part = loop_partitions()
     # 'copartition': identity instead of the broadcast hint — the rank
     # sides are ExistingRDD scans with no stats, so the planner picks a
     # shuffled join and EnsureRequirements finds the walk already
@@ -702,11 +710,13 @@ def label_prop(edges: DataFrame, rounds: int = _LP_ROUNDS) -> DataFrame:
     - The symmetric edge list is hash-clustered on ``node`` ONCE and
       persisted (persist keeps the repartition's outputPartitioning; a
       localCheckpoint forgets it), so the broadcast label join keeps the
-      clustering and BOTH per-round aggregations (the (node, label) vote
-      count and the per-node argmax) ride it: no per-round exchange over
-      the 2|E|-row message volume.  The only per-round shuffle is the
-      ghost-row union's argmax input, ≤ |V| partial-agg rows
-      (plans/r12/q_label_prop_*).
+      clustering and the (node, label) vote count rides it: no per-round
+      exchange over the 2|E|-row message volume.  The ghost rows are
+      repartitioned the same way, so both union children share that
+      clustering and the per-node argmax rides it too.  The only
+      per-round shuffle is that |V|-row repartition, and no exchange is
+      planned at the session's partition count: the loop never writes
+      session conf.
     - A round that changes no label is a fixpoint: every remaining
       round is the identity, so stopping there returns the bits of the
       full fixed-round unroll (and hence of the oracle).  This only skips
@@ -714,10 +724,7 @@ def label_prop(edges: DataFrame, rounds: int = _LP_ROUNDS) -> DataFrame:
       variant the determinism contract rules out.  The changed-label
       count is an Observation filled by the round's own eager
       checkpoint, so the probe costs no job."""
-    import os
-
-    n_part = int(os.environ.get("MMBD_CC_SHUFFLE_PARTITIONS", "8"))
-    spark = edges.sparkSession
+    n_part = loop_partitions()
     sym = (
         edges.select(F.col("u").alias("node"), F.col("v").alias("nbr"))
         .unionAll(edges.select(F.col("v").alias("node"), F.col("u").alias("nbr")))
@@ -729,19 +736,19 @@ def label_prop(edges: DataFrame, rounds: int = _LP_ROUNDS) -> DataFrame:
         sym.select("node").distinct().select("node", F.col("node").alias("label"))
         .localCheckpoint(eager=True)
     )
-    old_part = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n_part))
     try:
         for _ in range(rounds):
             msgs = sym.join(
                 F.broadcast(labels.select(F.col("node").alias("nbr"), "label")), "nbr"
             ).select("node", "label")
             votes = msgs.groupBy("node", "label").agg(F.count(F.lit(1)).alias("cnt"))
-            # prev label rides the argmax agg as a ghost row (cnt NULL) —
-            # one union into the shuffle the round already pays, instead of
-            # a per-round broadcast-build job for a prev-label join
+            # prev label rides the argmax agg as a ghost row (cnt NULL),
+            # clustered like votes so the union keeps the node clustering —
+            # instead of a per-round broadcast-build job for a prev-label join
             aug = votes.unionByName(
-                labels.select("node", "label", F.lit(None).cast("long").alias("cnt"))
+                labels.repartition(n_part, "node").select(
+                    "node", "label", F.lit(None).cast("long").alias("cnt")
+                )
             )
             obs = Observation()
             stepped = (
@@ -763,7 +770,6 @@ def label_prop(edges: DataFrame, rounds: int = _LP_ROUNDS) -> DataFrame:
             if not obs.get["n"]:  # no label changed: fixpoint
                 break
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_part)
         sym.unpersist()  # labels is an eager checkpoint — no lineage into sym
     return labels
 
@@ -1122,12 +1128,16 @@ def q_degree_powerlaw(spark: SparkSession, sf_dir: str) -> DataFrame:
 _BFS_ROUNDS = 6  # fixed unroll; the trade graph settles in ≤3 (dense bipartite)
 _WP_SEED_CAP = 1 << 40  # seed sentinel, far above any edge weight
 
-#: path semirings for ``relax``: (extend(v, w), aggregate, improves(cand, v),
-#: seed value).  ``hops`` ignores ``w`` and its edges carry no weight column.
+#: semirings for ``relax``: (extend(v, w), aggregate, improves(cand, v),
+#: seed(node) — the seed value as a column of the node id).  ``hops`` and
+#: ``min_label`` ignore ``w``, and their edges carry no weight column.
 _SEMIRINGS = {
-    "hops": (lambda v, w: v + 1, F.min, lambda c, v: c < v, 0),
-    "min_plus": (lambda v, w: v + w, F.min, lambda c, v: c < v, 0),
-    "max_min": (lambda v, w: F.least(v, w), F.max, lambda c, v: c > v, _WP_SEED_CAP),
+    "hops": (lambda v, w: v + 1, F.min, lambda c, v: c < v, lambda n: F.lit(0)),
+    "min_plus": (lambda v, w: v + w, F.min, lambda c, v: c < v, lambda n: F.lit(0)),
+    "max_min": (
+        lambda v, w: F.least(v, w), F.max, lambda c, v: c > v, lambda n: F.lit(_WP_SEED_CAP)
+    ),
+    "min_label": (lambda v, w: v, F.min, lambda c, v: c < v, lambda n: n),
 }
 
 
@@ -1135,11 +1145,8 @@ def _relax_edges(edges: DataFrame, semiring: str) -> DataFrame:
     """The symmetric edge list hash-clustered on ``dst`` and persisted:
     persist keeps the output partitioning (localCheckpoint forgets it),
     so every round's aggregate on ``dst`` rides this one exchange."""
-    import os
-
-    n_part = int(os.environ.get("MMBD_CC_SHUFFLE_PARTITIONS", "8"))
-    carry = () if semiring == "hops" else ("w",)
-    return symmetric(edges, *carry).repartition(n_part, "dst").persist()
+    carry = () if semiring in ("hops", "min_label") else ("w",)
+    return symmetric(edges, *carry).repartition(loop_partitions(), "dst").persist()
 
 
 def _relax_round(sym: DataFrame, state: DataFrame, frontier: DataFrame, semiring: str) -> DataFrame:
@@ -1161,12 +1168,14 @@ def _relax_round(sym: DataFrame, state: DataFrame, frontier: DataFrame, semiring
 
 
 def relax(edges: DataFrame, seeds: DataFrame, semiring: str, rounds: int) -> DataFrame:
-    """Multi-source path relaxation over an undirected edge list ``(src,
+    """Multi-source relaxation over an undirected edge list ``(src,
     dst[, w])`` from a ``(node)`` seed set under one of ``_SEMIRINGS``:
     ``hops`` (BFS hop count), ``min_plus`` (shortest path over cost
-    ``w``), ``max_min`` (widest path: the best bottleneck weight ``w``).
-    Returns ``(node, v)`` for every vertex reached; seeds start at the
-    semiring's seed value.
+    ``w``), ``max_min`` (widest path: the best bottleneck weight ``w``),
+    ``min_label`` (connected components: the least node id reachable).
+    Returns ``(node, v)`` for every vertex reached.  Seeds start at the
+    semiring's seed value: 0 for ``hops`` and ``min_plus``,
+    ``_WP_SEED_CAP`` for ``max_min``, their own id for ``min_label``.
 
     Invariants:
 
@@ -1190,6 +1199,10 @@ def relax(edges: DataFrame, seeds: DataFrame, semiring: str, rounds: int) -> Dat
       exchange, and one full-outer merge is eagerly local-checkpointed.
       The improved-row count is an Observation filled inside the
       checkpoint's own job, so the fixpoint probe costs no extra job.
+    - Round 0 broadcasts the whole seed set as its frontier.  Under
+      ``min_label`` every vertex of the graph is a seed, so that build
+      is |V| rows of the edge graph itself (for dedup, the candidate
+      graph, not the corpus).
 
     Measured negative (OPTIMIZATION_r13.md): a persist-chained state
     instead of the eager checkpoint keeps ``node`` clustering, but each
@@ -1199,9 +1212,9 @@ def relax(edges: DataFrame, seeds: DataFrame, semiring: str, rounds: int) -> Dat
     with the flat checkpoint).
     Swap localCheckpoint for a reliable checkpoint cadence on a cluster
     that can lose executors."""
-    seed = _SEMIRINGS[semiring][3]
+    seed = _SEMIRINGS[semiring][3](F.col("node"))
     sym = _relax_edges(edges, semiring)
-    state = seeds.select("node", F.lit(seed).cast("long").alias("v")).localCheckpoint(eager=True)
+    state = seeds.select("node", seed.cast("long").alias("v")).localCheckpoint(eager=True)
     frontier = state
     try:
         for r in range(rounds + 1):

@@ -40,16 +40,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register
-from .graph import _PR_ITERS
+from .graph import _PR_ITERS, loop_partitions
 
 _HITS_ITERS = _PR_ITERS  # 10 — same fixed-unroll contract as PageRank
 
 
-def hits(
-    spark: SparkSession,
-    edges: DataFrame,
-    iters: int = _HITS_ITERS,
-) -> DataFrame:
+def hits(edges: DataFrame, iters: int = _HITS_ITERS) -> DataFrame:
     """Power-method HITS over a directed edge list ``(src, dst)``.
 
     Per round: auth_raw(v) = round(Σ_{u→v} hub(u), 12); auth =
@@ -92,9 +88,7 @@ def hits(
     semantics, no per-round recombine join); the full (node, hub, auth)
     frame with exact 0.0 on the off sides is assembled once at the
     end."""
-    import os
-
-    n_part = int(os.environ.get("MMBD_CC_SHUFFLE_PARTITIONS", "8"))
+    n_part = loop_partitions()
     # repartition BEFORE distinct: the dedup rides the one clustering
     # exchange instead of paying its own
     ed = edges.select("src", "dst").repartition(n_part, "src").distinct().persist()
@@ -218,7 +212,7 @@ def q_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle-checked against the same method unrolled into DuckDB CTEs."""
     from .graph import trade_edges
 
-    state = hits(spark, trade_edges(spark, sf_dir))
+    state = hits(trade_edges(spark, sf_dir))
     return state.select(
         F.when(F.col("node") % 2 == 0, F.lit("supplier")).otherwise(F.lit("customer")).alias("kind"),
         (F.col("node") / 2).cast("bigint").alias("key"),

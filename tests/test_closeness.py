@@ -15,9 +15,10 @@ from matrix_multiplication_bigdata_ind_assignments_spark.operators.graph import 
 )
 
 # jobs one q_closeness_landmarks call launches at sf0.001 (edge and
-# seed-state checkpoints, a checkpoint and an empty-frontier probe per BFS
-# round, then the result); the per-pair table form launched 54
-_CLOSENESS_JOBS_SF0001 = 32
+# seed-state checkpoints, one checkpoint per BFS round with the
+# empty-frontier probe riding it as an Observation, then the result); a
+# separate isEmpty probe per round launched 32, the per-pair table form 54
+_CLOSENESS_JOBS_SF0001 = 28
 
 
 def _harmonic(edges, **kw):

@@ -4,6 +4,8 @@ from pyspark.sql import functions as F
 
 from matrix_multiplication_bigdata_ind_assignments_spark.operators import dedup as D
 
+from conftest import count_jobs
+
 
 def _docs(spark):
     base = "the quick brown fox jumps over the lazy dog again and again today"
@@ -105,18 +107,17 @@ def test_star_contraction_handles_deep_chain(spark):
     assert [(r["comp"], r["n_members"], r["keeper_id"]) for r in rows] == [(0, 201, 0)]
 
 
-def test_propagation_raises_on_unconverged_cap(spark, monkeypatch):
-    """Capped-out propagation must fail loud, never return wrong groups."""
+def test_propagation_raises_on_unconverged_cap(spark):
+    """Capped-out min-label propagation must fail loud, never return wrong
+    groups: a 60-deep chain is still improvable after 3 rounds."""
     import pytest
 
-    from matrix_multiplication_bigdata_ind_assignments_spark.operators.dedup import (
-        connected_components,
-    )
+    from matrix_multiplication_bigdata_ind_assignments_spark.operators.graph import relax
 
-    monkeypatch.setenv("MMBD_CC_MAX_ITERS", "3")
-    chain = spark.createDataFrame([(i, i + 1) for i in range(60)], "va long, vb long")
-    with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(spark, chain, "va", "vb").collect()
+    chain = spark.createDataFrame([(i, i + 1) for i in range(60)], "src long, dst long")
+    seeds = spark.createDataFrame([(i,) for i in range(61)], "node long")
+    with pytest.raises(AssertionError, match="improvable"):
+        relax(chain, seeds, "min_label", rounds=3)
 
 
 def test_star_raises_on_unconverged_cap(spark, monkeypatch):
@@ -129,10 +130,26 @@ def test_star_raises_on_unconverged_cap(spark, monkeypatch):
         connected_components_star,
     )
 
-    monkeypatch.setenv("MMBD_CC_MAX_ITERS", "1")
+    monkeypatch.setattr(D, "_CC_ROUNDS", 1)
     chain = spark.createDataFrame([(i, i + 1) for i in range(60)], "va long, vb long")
     with pytest.raises(RuntimeError, match="did not converge"):
         connected_components_star(spark, chain, "va", "vb").collect()
+
+
+# jobs one q_dedup_components call launches at sf0.001 once the MinHash
+# hot-bucket probe is memoized (pair checkpoint, seed checkpoint, one
+# checkpoint per relax round with its fixpoint probe riding it as an
+# Observation, then the result); the hand-written propagation loop with a
+# count probe every third round launched 31
+_CC_JOBS_SF0001 = 19
+
+
+def test_components_query_job_count_bounded(spark, sf_dir):
+    """One q_dedup_components call (plan build + collect) stays within two
+    jobs of the probe-free count."""
+    D.q_dedup_minhash(spark, sf_dir)  # memoizes the hot-bucket probe
+    jobs = count_jobs(spark, "test:cc-jobs", lambda: D.q_dedup_components(spark, sf_dir).collect())
+    assert jobs <= _CC_JOBS_SF0001 + 2, jobs
 
 
 def test_embedding_fixture_threshold_margin():
@@ -364,9 +381,7 @@ def test_keep_best_keeper_dominates_group(spark, sf_dir):
     }
     labels = {
         r["doc_id"]: r["comp"]
-        for r in D.component_labels(
-            spark, D.q_dedup_minhash(spark, sf_dir), "da", "db"
-        ).collect()
+        for r in D.component_labels(D.q_dedup_minhash(spark, sf_dir), "da", "db").collect()
     }
     assert sum(r["n_members"] for r in best.values()) == len(docs)
     for doc, q in docs.items():

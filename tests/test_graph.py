@@ -639,33 +639,54 @@ def test_path_query_job_count_bounded(spark, sf_dir, query):
     assert jobs <= _PATH_JOBS_SF0001[query] + 2, jobs
 
 
-@pytest.mark.parametrize("query", sorted(_PATH_JOBS_SF0001))
-def test_path_query_invariant_to_shuffle_partitions(spark, sf_dir, query, monkeypatch):
-    """Results must not depend on the session's shuffle partition count,
-    and relax never writes session conf (its clustering is an explicit
-    repartition)."""
+def _assert_partition_invariant(spark, monkeypatch, module, loop, run):
+    """``run()`` returns equal rows at session shuffle partitions {1, 8,
+    64}, and the loop ``module.<loop>`` never writes session conf while it
+    runs (its clustering is an explicit repartition)."""
     from pyspark.sql.conf import RuntimeConfig
 
-    relax = G.relax
+    fn = getattr(module, loop)
 
     def poisoned(*a, **kw):
         with monkeypatch.context() as m:
-            m.setattr(RuntimeConfig, "set", lambda *_: pytest.fail("relax set a conf"))
-            return relax(*a, **kw)
+            m.setattr(RuntimeConfig, "set", lambda *_: pytest.fail(f"{loop} set a conf"))
+            return fn(*a, **kw)
 
-    monkeypatch.setattr(G, "relax", poisoned)
+    monkeypatch.setattr(module, loop, poisoned)
     key = "spark.sql.shuffle.partitions"
     old = spark.conf.get(key)
     got = []
     try:
         for parts in (1, 8, 64):
             spark.conf.set(key, str(parts))
-            got.append(sorted(tuple(r) for r in getattr(G, query)(spark, sf_dir).collect()))
+            got.append(sorted(tuple(r) for r in run().collect()))
             assert spark.conf.get(key) == str(parts)
     finally:
         spark.conf.set(key, old)
     assert got[0] == got[1] == got[2]
     assert got[0]
+
+
+@pytest.mark.parametrize("query", sorted(_PATH_JOBS_SF0001))
+def test_path_query_invariant_to_shuffle_partitions(spark, sf_dir, query, monkeypatch):
+    """Results must not depend on the session's shuffle partition count,
+    and relax never writes session conf."""
+    run = getattr(G, query)
+    _assert_partition_invariant(spark, monkeypatch, G, "relax", lambda: run(spark, sf_dir))
+
+
+@pytest.mark.parametrize("query", ["q_dedup_components", "q_dedup_keep_best", "q_label_prop"])
+def test_component_and_community_query_invariant_to_shuffle_partitions(
+    spark, sf_dir, query, monkeypatch
+):
+    """The connected-component queries (relax under ``min_label``) and
+    q_label_prop give the same rows whatever the session's shuffle
+    partition count, and neither loop writes session conf."""
+    from matrix_multiplication_bigdata_ind_assignments_spark.operators import dedup as D
+
+    module, loop = (G, "label_prop") if query == "q_label_prop" else (D, "relax")
+    run = getattr(module, query)
+    _assert_partition_invariant(spark, monkeypatch, module, loop, lambda: run(spark, sf_dir))
 
 
 def test_kcore_early_stop_equals_full_unroll(spark):

@@ -16,7 +16,7 @@ def test_hits_hand_fixture(spark):
     supplier 2 (3 out-edges) out-hubs supplier 4; the off-sides stay
     exactly 0.0 (suppliers get no in-edges, customers no out-edges)."""
     edges = spark.createDataFrame([(2, 1), (2, 3), (2, 5), (4, 1)], "src long, dst long")
-    state = {r["node"]: (r["hub"], r["auth"]) for r in hits(spark, edges).collect()}
+    state = {r["node"]: (r["hub"], r["auth"]) for r in hits(edges).collect()}
     assert state[1][1] > state[3][1] == state[5][1] > 0
     assert state[2][0] > state[4][0] > 0
     assert state[2][1] == 0.0 and state[4][1] == 0.0  # suppliers: no in-edges
@@ -26,7 +26,7 @@ def test_hits_hand_fixture(spark):
 def test_hits_norms_are_unit(spark, sf_dir):
     """Each round L2-normalizes both vectors; after the final round both
     norms must sit at 1 (±12-dp rounding accumulation)."""
-    state = hits(spark, trade_edges(spark, sf_dir)).collect()
+    state = hits(trade_edges(spark, sf_dir)).collect()
     nh = math.sqrt(sum(r["hub"] ** 2 for r in state))
     na = math.sqrt(sum(r["auth"] ** 2 for r in state))
     assert abs(nh - 1.0) < 1e-6, nh
@@ -40,8 +40,8 @@ def test_hits_deterministic_repeat(spark):
     edges = spark.createDataFrame(
         [(2, 1), (2, 3), (4, 3), (4, 5), (6, 1), (6, 5), (6, 7)], "src long, dst long"
     )
-    a = sorted(tuple(r) for r in hits(spark, edges).collect())
-    b = sorted(tuple(r) for r in hits(spark, edges.repartition(7)).collect())
+    a = sorted(tuple(r) for r in hits(edges).collect())
+    b = sorted(tuple(r) for r in hits(edges.repartition(7)).collect())
     assert a == b
 
 
@@ -55,8 +55,8 @@ def test_hits_more_iters_converges(spark):
     edges = spark.createDataFrame(
         [(2, 1), (2, 3), (4, 3), (4, 5), (6, 1), (6, 5), (6, 7)], "src long, dst long"
     )
-    a = {r["node"]: (r["hub"], r["auth"]) for r in hits(spark, edges).collect()}
-    b = {r["node"]: (r["hub"], r["auth"]) for r in hits(spark, edges, iters=20).collect()}
+    a = {r["node"]: (r["hub"], r["auth"]) for r in hits(edges).collect()}
+    b = {r["node"]: (r["hub"], r["auth"]) for r in hits(edges, iters=20).collect()}
     assert a.keys() == b.keys()
     worst = max(max(abs(a[n][0] - b[n][0]), abs(a[n][1] - b[n][1])) for n in a)
     assert worst < 1e-4, worst
@@ -66,7 +66,7 @@ def test_hits_bipartite_sides_zero_on_trade_graph(spark, sf_dir):
     """On the supplier→customer graph every supplier is a pure hub and
     every customer a pure authority — the encoded parity decides the
     zero side exactly (0/norm = 0 survives rounding)."""
-    state = hits(spark, trade_edges(spark, sf_dir)).collect()
+    state = hits(trade_edges(spark, sf_dir)).collect()
     assert all(r["auth"] == 0.0 for r in state if r["node"] % 2 == 0)
     assert all(r["hub"] == 0.0 for r in state if r["node"] % 2 == 1)
     # and the nonzero sides are genuinely populated
@@ -97,7 +97,7 @@ def test_hits_loop_shuffle_is_score_sized(spark, sf_dir):
     for iters in (1, 11):
 
         def run(it=iters):
-            hits(spark, edges, iters=it).write.format("noop").mode("overwrite").save()
+            hits(edges, iters=it).write.format("noop").mode("overwrite").save()
 
         run()  # warm
         try:
@@ -125,7 +125,7 @@ def test_hits_invariant_to_shuffle_partitions(spark, sf_dir, monkeypatch):
             spark.conf.set(key, str(parts))
             with monkeypatch.context() as m:
                 m.setattr(RuntimeConfig, "set", lambda *a: pytest.fail("operator set a conf"))
-                got.append(sorted(tuple(r) for r in hits(spark, edges).collect()))
+                got.append(sorted(tuple(r) for r in hits(edges).collect()))
             assert spark.conf.get(key) == str(parts)
     finally:
         spark.conf.set(key, old)

@@ -258,7 +258,7 @@ def test_components_closure_oracle_matches_spark_fixpoints(spark, edges):
     pairs = spark.createDataFrame(edges, "da long, db long")
     a = {
         (r["comp"], r["n_members"], r["keeper_id"])
-        for r in connected_components(spark, pairs, "da", "db").collect()
+        for r in connected_components(pairs, "da", "db").collect()
     }
     b = {
         (r["comp"], r["n_members"], r["keeper_id"])

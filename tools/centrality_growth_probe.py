@@ -91,7 +91,7 @@ def main() -> int:
     for op_label, run in (
         (
             "q_hits loop",
-            lambda e: hits(spark, e).agg(F.round(F.sum("hub"), 3).alias("s")).first()[0],
+            lambda e: hits(e).agg(F.round(F.sum("hub"), 3).alias("s")).first()[0],
         ),
         (
             # the growth arms run the COPARTITION arm: a broadcast
