@@ -129,6 +129,35 @@ def noise_policy(committed: dict | None, sentinel_now: float) -> dict:
     }
 
 
+def gemm_sentinel(best: bool = False) -> float:
+    """Box-load reference: three warmed 1024³ GEMMs.
+
+    ``best=False`` returns their total (3 decimals): the run-level
+    sentinel whose wall time calibrates background load, so records
+    taken an hour apart on unchanged code (±15-40% swings on a shared
+    VM) can be normalized.  One untimed warm-up GEMM comes first: the
+    one-shot form measured numpy/BLAS first-call cost (0.38 s cold vs
+    0.03 s warm on the same idle box), which tracks import state, not
+    load.
+
+    ``best=True`` returns the fastest of the three (4 decimals): the
+    per-query contention probe, cheap enough (~0.1 s) to run after every
+    query.  A single ~11 ms GEMM has a heavy scheduling-jitter tail even
+    on an idle guest (p90 ≈ 4× min under hypervisor steal), so the min
+    only rises when contention is sustained across the probe — the kind
+    that corrupts a multi-second query timing."""
+    import numpy as np
+
+    a = np.ones((1024, 1024))
+    a = a @ a / 1024.0  # warm-up, untimed
+    laps = []
+    for _ in range(3):
+        t0 = time.perf_counter()
+        a = a @ a / 1024.0
+        laps.append(time.perf_counter() - t0)
+    return round(min(laps), 4) if best else round(sum(laps), 3)
+
+
 def mat_from_lineitem(spark, sf_dir: str, n: int, shift: int = 0):
     """Deterministic n×n COO matrix from the lineitem fact table."""
     l = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
@@ -497,53 +526,6 @@ def main() -> int:
 
     benches["q_ann_ivf_cold"] = ivf_cold
 
-    # One untimed warmup pass per query before the timed pass: the reference
-    # benchmarks steady state the same way (r=3 averages, JIT-warmed Java
-    # numbers per BASELINE.md; matrices generated outside the clock), and a
-    # cold first run here measures Janino codegen + Python worker spin-up,
-    # not the plan.  SPARK_GRAFT_BENCH_WARMUP=0 restores cold-run timing.
-    def noise_sentinel() -> float:
-        """Fixed CPU-bound reference task (3× 1024³ GEMM): its wall time
-        calibrates background box load, so cross-round comparisons of the
-        query timings can be normalized — this host measures ±15-40%
-        swings on UNCHANGED code between runs an hour apart (r6/r7
-        records), and the sentinel tells the reader which record ran on
-        the quieter box.  One UNTIMED warm-up GEMM precedes the timed
-        loop (r10): the one-shot form measured numpy/BLAS first-call
-        cost (0.38 s cold vs 0.03 s warm on the same idle box), so its
-        value tracked import state, not box load."""
-        import numpy as np
-
-        a = np.ones((1024, 1024))
-        a = a @ a / 1024.0  # warm-up: BLAS thread pool + pages, untimed
-        t0 = time.perf_counter()
-        for _ in range(3):
-            a = a @ a / 1024.0
-        return round(time.perf_counter() - t0, 3)
-
-    def mini_sentinel() -> float:
-        """Min of three warmed 1024³ GEMMs (~11 ms each on this box when
-        quiet) — the per-query contention probe (VERDICT r11 item 3):
-        cheap enough (~0.1 s) to run after EVERY query, so a 4× timing
-        outlier carries its own evidence of whether the box was loaded
-        AT THAT MOMENT rather than leaning on the run-global start/end
-        pair.  Min-of-3 because a single ~11 ms GEMM has a heavy
-        scheduling-jitter tail even on an idle guest (measured p90 ≈
-        4× min under invisible hypervisor steal — this is a VM; loadavg
-        can read >5 with no runnable local process); the min only rises
-        when contention is SUSTAINED across the probe, which is the
-        signal that actually corrupts a multi-second query timing."""
-        import numpy as np
-
-        a = np.ones((1024, 1024))
-        a = a @ a / 1024.0  # warm-up, untimed
-        best = float("inf")
-        for _ in range(3):
-            t0 = time.perf_counter()
-            a = a @ a / 1024.0
-            best = min(best, time.perf_counter() - t0)
-        return round(best, 4)
-
     def block_of(name: str) -> str:
         """Bench-section classification for the per-block sentinel
         rollup (streaming / graph / matmul / relational)."""
@@ -559,9 +541,14 @@ def main() -> int:
             return "graph"
         return "relational"
 
-    sentinel_start = noise_sentinel()
+    sentinel_start = gemm_sentinel()
     load_start = os.getloadavg()[0]
 
+    # One untimed warmup pass per query before the timed pass: the reference
+    # benchmarks steady state the same way (r=3 averages, JIT-warmed Java
+    # numbers per BASELINE.md; matrices generated outside the clock), and a
+    # cold first run here measures Janino codegen + Python worker spin-up,
+    # not the plan.  SPARK_GRAFT_BENCH_WARMUP=0 restores cold-run timing.
     warmup = int(os.environ.get("SPARK_GRAFT_BENCH_WARMUP", "1"))
     repeats = int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "3"))
     from matrix_multiplication_bigdata_ind_assignments_spark.functions.metrics import (
@@ -607,7 +594,7 @@ def main() -> int:
         # methodology choice, not warm-up — record both).
         timings[name] = round(min(times), 3)
         timings_mean[name] = round(sum(times) / len(times), 3)
-        query_sentinel[name] = [mini_sentinel(), round(os.getloadavg()[0], 1)]
+        query_sentinel[name] = [gemm_sentinel(best=True), round(os.getloadavg()[0], 1)]
         pk = executor_peak_mb()
         if pk is not None:
             # executor peaks are monotonic since JVM start, so this is the
@@ -625,7 +612,7 @@ def main() -> int:
     total = round(sum(timings.values()), 3)
     sentinel = {
         "sentinel_start_sec": sentinel_start,
-        "sentinel_end_sec": noise_sentinel(),
+        "sentinel_end_sec": gemm_sentinel(),
         "loadavg_start": round(load_start, 1),
         "loadavg_end": round(os.getloadavg()[0], 1),
     }

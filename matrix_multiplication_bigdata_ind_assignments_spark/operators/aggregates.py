@@ -268,7 +268,7 @@ def speedup_efficiency(
     per_run: DataFrame, group_col: str, p_col: str, t_col: str, workers=None
 ) -> DataFrame:
     """q_speedup_efficiency's engine, exposed so the strong-scaling
-    harness (tools/strong_scaling.py — VERDICT r11 item 1) derives the
+    sweep (``tools/probe.py --cores``) derives the
     ENGINE'S OWN speedup/efficiency curve through the same operator it
     ships for user results: per group, baseline T1 = the t of the lowest
     p (first_value over the ordered window), speedup = T1/Tp, efficiency

@@ -86,8 +86,9 @@ def landmark_harmonic(
     - ``'copartition'``: the symmetric edges are hash-clustered on src
       once (persisted) and each round's frontier is repartitioned the
       same way, so the expansion exchanges only the frontier — the arm
-      for graphs whose frontier outgrows a broadcast build
-      (tools/centrality_growth_probe.py).  Both arms are bit-identical.
+      for graphs whose frontier outgrows a broadcast build (SCALING.md
+      "Centrality additions at the second decade").  Both arms are
+      bit-identical.
 
     Neither arm changes session state: partition counts are explicit
     ``repartition`` calls, never ``spark.conf.set``."""

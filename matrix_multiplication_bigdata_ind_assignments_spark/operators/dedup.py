@@ -877,8 +877,8 @@ def simhash_pairs(d: DataFrame, blocks: int = _SIMHASH_BLOCKS) -> DataFrame:
     # A qualifying pair matches in EVERY fully-untouched block/combo (up
     # to 4 resp. C(6,3)=20 of them — near-identical fingerprints match in
     # all), so the naive join emits it that many times and a distinct
-    # must exchange the whole duplicated candidate set (measured by
-    # tools/dedup_growth_probe.py: the pre-distinct exchange at 100x was
+    # must exchange the whole duplicated candidate set (SCALING.md
+    # "simhash c6 banding": the pre-distinct exchange at 100x was
     # ~10 GB for a 202M-row final pair set).  Instead, emit each pair
     # ONLY from its FIRST matching block — blk == position of the first
     # block mask untouched by ha XOR hb, a per-row integer test in the

@@ -490,9 +490,8 @@ def triangle_counts(edges: DataFrame, orient: str = "degree") -> DataFrame:
     (deg, id) order above, the production arm) or ``'id'`` (plain
     u < v, the textbook-naive arm kept ONLY as the measured
     counter-example: on a hub of degree k whose id sorts low it fans
-    out C(k,2) wedges where the degree order fans out zero —
-    tools/tri_skew_probe.py runs the two arms on the same star graph
-    and SCALING.md records the blow-up).  Both arms return identical
+    out C(k,2) wedges where the degree order fans out zero — SCALING.md
+    "Triangle-count orientation" records both arms on one star graph).  Both arms return identical
     counts; only the wedge volume differs."""
     deg, oriented, wedges = oriented_wedges(edges, orient)
     # r12 (guide §2.3): the close join shuffles EVERY wedge by its
@@ -540,9 +539,8 @@ def triangle_counts(edges: DataFrame, orient: str = "degree") -> DataFrame:
 
 
 def oriented_wedges(edges: DataFrame, orient: str = "degree"):
-    """The orientation + wedge-generation stages of triangle_counts,
-    exposed so tools/tri_skew_probe.py can MEASURE wedge volume per
-    orientation arm.  Returns (deg, oriented, wedges)."""
+    """The orientation + wedge-generation stages of triangle_counts.
+    Returns (deg, oriented, wedges)."""
     if orient not in ("degree", "id"):
         raise ValueError(f"orient must be 'degree' or 'id', got {orient!r}")
     # Materialize the edge list once: it feeds the degree agg, the

@@ -781,14 +781,7 @@ def q_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     the inputs).  The per-token collision probability is ~2·ulp(1e7)/1
     ≈ 4e-9; over the ~3e4-token fixture vocab that is ~1e-4 per sweep
     — an accepted, documented residual, not a guaranteed contract."""
-    return lm_perplexity_frame(load(spark, sf_dir, "documents"))
-
-
-def lm_perplexity_frame(docs: DataFrame) -> DataFrame:
-    """q_lm_perplexity's pipeline over an arbitrary (doc_id, text) frame —
-    factored out so tools/lm_scale_probe.py can drive it against a
-    blown-up corpus and measure the vocab/stream asymmetry claim."""
-    toks = docs.select(
+    toks = load(spark, sf_dir, "documents").select(
         "doc_id",
         F.explode(F.filter(F.split("text", " "), lambda t: t != "")).alias("token"),
     )

@@ -103,11 +103,11 @@ def _stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return normalize_event_ts(raw)
 
 
-#: stateOperators metrics of the most recently drained stream (VERDICT r9
-#: item 7): the final progress event carrying state metrics, so callers
-#: (tests/test_streaming.py envelopes, tools/stream_state_probe.py) can
-#: pin numRowsTotal/memoryUsedBytes the way batch writers pin shuffle
-#: bytes.  Capture-only — no behavior change to the drain itself.
+#: stateOperators metrics of the most recently drained stream: the final
+#: progress event carrying state metrics, so callers (tests/test_streaming.py
+#: envelopes; SCALING.md "Streaming state envelopes") can pin
+#: numRowsTotal/memoryUsedBytes the way batch writers pin shuffle bytes.
+#: Capture-only — no behavior change to the drain itself.
 _LAST_STATE: dict = {"sink": None, "ops": []}
 
 

@@ -1,9 +1,5 @@
 """Landmark harmonic closeness (operators/closeness.py)."""
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 import pytest  # noqa: E402
 
 from matrix_multiplication_bigdata_ind_assignments_spark.operators.closeness import (  # noqa: E402

@@ -1,9 +1,5 @@
 """Reciprocal Rank Fusion (operators/fusion.py)."""
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 from matrix_multiplication_bigdata_ind_assignments_spark.operators.fusion import (  # noqa: E402
     _dense_ranks,
     _sparse_ranks,

@@ -1,12 +1,9 @@
 """Misra–Gries heavy hitters (operators/heavyhitters.py)."""
 
-import sys
 from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
-
-sys.path.insert(0, "/root/repo")
 
 from matrix_multiplication_bigdata_ind_assignments_spark.operators.heavyhitters import (  # noqa: E402
     _mg_summaries,

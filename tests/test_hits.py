@@ -1,9 +1,6 @@
 """HITS hubs/authorities (operators/hits.py)."""
 
 import math
-import sys
-
-sys.path.insert(0, "/root/repo")
 
 from matrix_multiplication_bigdata_ind_assignments_spark.operators.hits import hits  # noqa: E402
 from matrix_multiplication_bigdata_ind_assignments_spark.operators.graph import trade_edges  # noqa: E402

@@ -1,9 +1,6 @@
 """Interpolated Kneser–Ney bigram LM (operators/ngram_lm.py)."""
 
 import math
-import sys
-
-sys.path.insert(0, "/root/repo")
 
 from matrix_multiplication_bigdata_ind_assignments_spark.operators.ngram_lm import (  # noqa: E402
     _KN_D,

@@ -1,11 +1,7 @@
 """TrustRank / personalized PageRank: graph.pagerank with ``seed_mod``
 (operators/ppr.py registers q_trustrank on it)."""
 
-import sys
-
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 from matrix_multiplication_bigdata_ind_assignments_spark.operators.graph import _decode_ranks, pagerank, trade_edges  # noqa: E402
 from matrix_multiplication_bigdata_ind_assignments_spark.operators.ppr import _SEED_MOD, q_trustrank  # noqa: E402

@@ -3,12 +3,8 @@
 bit-identical on every fixture, and the closed-form ntile must match
 SQL ntile on adversarial (N, b) shapes."""
 
-import sys
-
 import pytest
 from pyspark.sql import functions as F
-
-sys.path.insert(0, "/root/repo")
 
 from matrix_multiplication_bigdata_ind_assignments_spark import registry  # noqa: E402
 from matrix_multiplication_bigdata_ind_assignments_spark.functions.scan import ntile_of_rank, two_pass_scan  # noqa: E402
@@ -19,7 +15,6 @@ REGISTRY = registry.REGISTRY
 from conftest import rows_set  # noqa: E402
 
 ALL_SF = ["/root/testdata/sf0.001", "/root/testdata/sf0.01", "/root/testdata/sf0.1"]
-
 
 TWINS = [
     "q_pareto_abc",

@@ -8,13 +8,10 @@ the prefix bound vs exact rational arithmetic for every size class, and
 (c) that the filter actually prunes (otherwise it's dead weight)."""
 
 import math
-import sys
 from fractions import Fraction
 
 import pytest
 from pyspark.sql import functions as F
-
-sys.path.insert(0, "/root/repo")
 
 from matrix_multiplication_bigdata_ind_assignments_spark.operators.setsim import (  # noqa: E402
     _T_DEN,

@@ -1,7 +1,9 @@
 #!/usr/bin/env python
-"""Capture .explain("formatted") + executed job/shuffle evidence for a
-query list into plans/<tag>/<query>_<suffix>.txt (the optimization-round
-plan audit files).
+"""Print or capture .explain("formatted") + executed job/shuffle
+evidence for registered queries.  With ``--tag`` each query goes to
+plans/<tag>/<query>_<suffix>.txt (the optimization-round plan audit
+files); without it the same text goes to stdout.  With no query names
+it lists the registered queries.
 
 For the eager iterative operators (graph loops, Lloyd trainers) the
 RETURNED frame explains as a bare ExistingRDD scan — the interesting
@@ -10,7 +12,7 @@ this records: number of Spark jobs launched, total tasks, and shuffle
 read/write MB around one full execution (noop sink), which is where a
 job-count optimization (skipped certificate, early-stopped round) shows.
 
-Usage: python tools/explain_queries.py --tag r12 --suffix before q_a q_b ...
+Usage: python tools/explain_queries.py [--tag T [--suffix before]] [--sf DIR] q_a q_b ...
 """
 
 from __future__ import annotations
@@ -18,7 +20,8 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
 def classic_context(spark):
@@ -55,10 +58,17 @@ def main() -> int:
         else:
             names.append(args[i]); i += 1
 
+    if "--tag" not in args:
+        tag = None  # print to stdout
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     os.environ.setdefault("MMBD_SHUFFLE_PARTITIONS", str(2 * int(cpus)))
 
     from matrix_multiplication_bigdata_ind_assignments_spark import registry
+
+    qs = registry.queries()
+    if not names:
+        print("queries:", ", ".join(sorted(qs)))
+        return 0
     from matrix_multiplication_bigdata_ind_assignments_spark.functions.metrics import (
         settled_snapshot,
         shuffle_delta,
@@ -76,10 +86,9 @@ def main() -> int:
     )
     sc = classic_context(spark)
     sc.setLogLevel("ERROR")
-    qs = registry.queries()
-    outdir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-                          "plans", tag)
-    os.makedirs(outdir, exist_ok=True)
+    if tag:
+        outdir = os.path.join(ROOT, "plans", tag)
+        os.makedirs(outdir, exist_ok=True)
 
     tracker = sc.statusTracker()
 
@@ -99,19 +108,22 @@ def main() -> int:
         # PySpark's SparkContext doesn't surface it, so call the
         # JavaSparkContext method directly
         sc._jsc.clearJobGroup()
+        text = (
+            f"# {name} — .explain('formatted') at sf_dir={sf_dir}\n"
+            f"# executed evidence (one full run incl. building the frame):\n"
+            f"#   spark jobs launched: {len(jobs1 - jobs0)}\n"
+            f"#   shuffle read MB: {d['shuffle_read_bytes'] / 1048576:.2f}"
+            f"  write MB: {d['shuffle_write_bytes'] / 1048576:.2f}\n"
+            f"#   spill mem MB: {d['spill_memory_bytes'] / 1048576:.2f}"
+            f"  disk MB: {d['spill_disk_bytes'] / 1048576:.2f}\n"
+            f"{plan}\n"
+        )
+        if not tag:
+            print(text, flush=True)
+            continue
         path = os.path.join(outdir, f"{name}_{suffix}.txt")
         with open(path, "w") as f:
-            f.write(f"# {name} — .explain('formatted') at sf_dir={sf_dir}\n")
-            f.write(
-                f"# executed evidence (one full run incl. building the frame):\n"
-                f"#   spark jobs launched: {len(jobs1 - jobs0)}\n"
-                f"#   shuffle read MB: {d['shuffle_read_bytes'] / 1048576:.2f}"
-                f"  write MB: {d['shuffle_write_bytes'] / 1048576:.2f}\n"
-                f"#   spill mem MB: {d['spill_memory_bytes'] / 1048576:.2f}"
-                f"  disk MB: {d['spill_disk_bytes'] / 1048576:.2f}\n"
-            )
-            f.write(plan)
-            f.write("\n")
+            f.write(text)
         print(f"wrote {path} (jobs={len(jobs1 - jobs0)}, "
               f"shuffle_w={d['shuffle_write_bytes']/1048576:.1f}MB)", flush=True)
     return 0

@@ -5,9 +5,11 @@ checklist can be audited at a glance.  Run: python tools/gen_coverage.py
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
 def main() -> int:
@@ -89,7 +91,7 @@ def main() -> int:
         "  run into the noisy side file (tests/test_bench_noise.py pins",
         "  the exact scenario).",
     ]
-    with open("/root/repo/COVERAGE.md", "w") as f:
+    with open(os.path.join(ROOT, "COVERAGE.md"), "w") as f:
         f.write("\n".join(lines) + "\n")
     print(f"wrote COVERAGE.md: {len(rows)} queries, {n_oracle} with oracles")
     return 0

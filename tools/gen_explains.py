@@ -7,10 +7,12 @@ Usage: python tools/gen_explains.py [sf_dir]
 from __future__ import annotations
 
 import io
+import os
 import sys
 from contextlib import redirect_stdout
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 # query → the property the plan must exhibit (checked by tests/test_plans.py
 # where assertable; restated here so the audit doc is self-contained)
@@ -378,7 +380,7 @@ def main() -> int:
         # keep the node tree, drop the verbose per-node field dump
         tree = plan.split("\n\n")[0]
         lines += [f"## {name}", "", f"**Must show:** {prop}", "", "```", tree, "```", ""]
-    with open("/root/repo/EXPLAINS.md", "w") as f:
+    with open(os.path.join(ROOT, "EXPLAINS.md"), "w") as f:
         f.write("\n".join(lines))
     print("wrote EXPLAINS.md")
     return 0

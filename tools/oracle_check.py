@@ -14,10 +14,12 @@ from __future__ import annotations
 
 import gc
 import math
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
 def normalize(rows, colnames):

@@ -17,19 +17,6 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
-def mini_sentinel() -> float:
-    import numpy as np
-
-    a = np.ones((1024, 1024))
-    a = a @ a / 1024.0
-    best = float("inf")
-    for _ in range(3):
-        t0 = time.perf_counter()
-        a = a @ a / 1024.0
-        best = min(best, time.perf_counter() - t0)
-    return round(best, 4)
-
-
 def main() -> int:
     args = sys.argv[1:]
     sf_dir = "/root/testdata/sf0.1"
@@ -50,6 +37,7 @@ def main() -> int:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     os.environ.setdefault("MMBD_SHUFFLE_PARTITIONS", str(2 * int(cpus)))
 
+    from bench import gemm_sentinel
     from matrix_multiplication_bigdata_ind_assignments_spark import registry
     from matrix_multiplication_bigdata_ind_assignments_spark.session import get_spark
 
@@ -68,7 +56,7 @@ def main() -> int:
             t0 = time.perf_counter()
             run(name)
             times.append(time.perf_counter() - t0)
-        s = mini_sentinel()
+        s = gemm_sentinel(best=True)
         print(
             f"{min(times):8.3f}s min  {sum(times)/len(times):8.3f}s mean  "
             f"sentinel {s:.4f}s  {name}",
