@@ -41,12 +41,13 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.loop import PARTITIONS, settle
 from ..registry import register
-from .graph import _unroll_stability_check, loop_partitions, symmetric, trade_edges
+from .graph import _unroll_stability_check, symmetric, trade_edges
 
 _CL_ROUNDS = 6  # fixed unroll; the trade graph settles in <=3 (dense bipartite)
 _CL_SEED_MOD = 20  # landmarks = trusted suppliers (node % 20 == 0), ~10% of suppliers
@@ -100,14 +101,13 @@ def landmark_harmonic(
             f"exact harmonic numerator |L|·lcm(1..rounds) can overflow a BIGINT"
         )
     lc = math.lcm(*range(1, rounds + 1))
-    n_part = loop_partitions()
     ck = lambda df: df.localCheckpoint(eager=True)  # noqa: E731
     sym = symmetric(edges)
     if join_strategy == "copartition":
-        sym = sym.repartition(n_part, "src").persist()
+        sym = sym.repartition(PARTITIONS, "src").persist()
         sym.count()  # materialize the one-time clustering
         # the hint keeps AQE from broadcasting the resident edges instead
-        ship = lambda df: df.repartition(n_part, "src").hint("shuffle_hash")  # noqa: E731
+        ship = lambda df: df.repartition(PARTITIONS, "src").hint("shuffle_hash")  # noqa: E731
     else:
         sym = ck(sym)
         ship = F.broadcast
@@ -139,8 +139,7 @@ def landmark_harmonic(
                 .groupBy(F.col("dst").alias("node"), "wi")
                 .agg(F.bit_or("m").alias("cm"))
             )
-            obs = Observation()
-            state = ck(
+            state, fresh = settle(
                 state.join(cand, ["node", "wi"], "full")
                 .select(
                     "node",
@@ -155,10 +154,10 @@ def landmark_harmonic(
                     F.expr("s0 | cm").alias("s"),
                     F.expr("cm & ~s0").alias("f"),
                     F.expr(f"acc + bit_count(cm & ~s0) * {lc // r}L").alias("acc"),
-                )
-                .observe(obs, F.count_if(F.col("f") != 0).alias("n"))
+                ),
+                F.col("f") != 0,
             )
-            if not obs.get["n"]:
+            if not fresh:
                 break  # level-set fixpoint: remaining rounds reach nothing
     finally:
         if join_strategy == "copartition":

@@ -9,12 +9,13 @@ different summation orders cannot drift across 10 iterations.
 
 from __future__ import annotations
 
-import os
+import contextlib
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.loop import PARTITIONS, pinned, settle
 from ..registry import register
 from ..sources import load
 
@@ -26,14 +27,6 @@ _PR_ITERS = 10
 # cadence 1 / 2 / 5 ran 4.80 / 4.12 / 4.01 s mean); deeper cadences trade
 # failure recompute and plan size for little more.
 _PR_TRUNCATE_EVERY = 2
-
-
-def loop_partitions() -> int:
-    """Partition count of the loop operators' explicit clusterings
-    (``MMBD_CC_SHUFFLE_PARTITIONS``, default 8): their state and edge
-    frames are small next to the inputs they come from; raise it to about
-    |V|/256 MB at scale."""
-    return int(os.environ.get("MMBD_CC_SHUFFLE_PARTITIONS", "8"))
 
 
 def pagerank(
@@ -116,7 +109,6 @@ def pagerank(
         raise ValueError(f"unknown join_strategy {join_strategy!r}")
     if seed_mod is not None and directed:
         raise ValueError("pagerank: seed_mod needs an undirected walk (no dangling-mass rule)")
-    n_part = loop_partitions()
     # 'copartition': identity instead of the broadcast hint — the rank
     # sides are ExistingRDD scans with no stats, so the planner picks a
     # shuffled join and EnsureRequirements finds the walk already
@@ -129,13 +121,13 @@ def pagerank(
     # exchange-free.  Copartition arm: the rank vector is shuffled to meet
     # the walk on src, so src-clustering keeps the |E| side unmoved.
     walk_key = "dst" if join_strategy == "broadcast" else "src"
-    walk, statics = pagerank_walk(edges, n_part, walk_key, directed)
-    # Broadcast arm: persist keeps statics' hash(node, n_part) clustering,
-    # and contribs arrives hash(dst, n_part) riding the walk, so the
-    # merge-hinted statics ⋈ contribs is co-partitioned — no exchange, no
-    # broadcast build.  Copartition arm (measured negative for a clustered
+    walk, statics = pagerank_walk(edges, PARTITIONS, walk_key, directed)
+    # Broadcast arm: persist keeps statics' hash(node, PARTITIONS)
+    # clustering, and contribs arrives hash(dst, PARTITIONS) riding the
+    # walk, so the merge-hinted statics ⋈ contribs is co-partitioned — no
+    # exchange, no broadcast build.  Copartition arm (measured negative for a clustered
     # statics, 3,568 → 8,650 B/iter at sf0.001): its contribs aggregate
-    # pays a real exchange that AQE coalesces below n_part, so a clustered
+    # pays a real exchange that AQE coalesces below PARTITIONS, so a clustered
     # statics mismatches and AQE re-exchanges a side per iteration; a
     # checkpointed statics lets both join sides coalesce together.  The
     # reliable-checkpoint knob checkpoints reliably: a localCheckpoint'ed
@@ -154,18 +146,6 @@ def pagerank(
             return df.checkpoint(eager=True)
         return df.localCheckpoint(eager=True)
 
-    # Copartition arm only: its per-iteration exchanges (the rank side and
-    # the contribution aggregate) are planned by EnsureRequirements at the
-    # session partition count, so the loop pins that count to n_part.  An
-    # explicit rank-side repartition instead (the closeness move) measured
-    # 22,396 vs 3,568 B/iter at sf0.001 under 32 session partitions: the
-    # contribution aggregate still writes one block per session partition,
-    # and the hint that keeps the walk resident stops AQE from broadcasting
-    # a small walk.  The broadcast arm's loop has no exchange and needs no
-    # pin.
-    pin = join_strategy == "copartition"
-    if pin:
-        old_part = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         if statics_clustered:
             statics = statics.persist()
@@ -184,53 +164,59 @@ def pagerank(
                 raise ValueError("pagerank: empty seed set")
             rank0 = F.when(seed, F.lit(1.0 / n_seeds)).otherwise(F.lit(0.0))
             teleport = F.lit(1.0 - damping) * rank0
-        if pin:
-            spark.conf.set("spark.sql.shuffle.partitions", str(n_part))
-        ranks = statics.withColumn("rank", rank0)
-        for it in range(iters):
-            # The rank state (node, outdeg, rank) is a |V|-row frame; its
-            # ExistingRDD scan carries no stats, so unhinted the planner
-            # would SMJ and re-sort the edge list every round (measured
-            # 31 MB shuffle / ~7 s vs 3 MB / ~2.5 s broadcast at sf0.1).
-            contribs = (
-                walk.join(bc(ranks), walk.src == ranks.node)
-                .groupBy("dst")
-                .agg(F.sum(F.col("rank") / F.col("outdeg")).alias("m"))
-            )
-            base = teleport
-            if statics_clustered:
-                joined = statics.join(
-                    contribs.hint("merge"), statics.node == contribs.dst, "left"
+        # Copartition arm only: its per-iteration exchanges (the rank side
+        # and the contribution aggregate) are planned by EnsureRequirements
+        # at the session partition count, so the loop pins that count to
+        # PARTITIONS.  An explicit rank-side repartition instead (the
+        # closeness move) measured 22,396 vs 3,568 B/iter at sf0.001 under
+        # 32 session partitions: the contribution aggregate still writes
+        # one block per session partition, and the hint that keeps the
+        # walk resident stops AQE from broadcasting a small walk.  The
+        # broadcast arm's loop has no exchange and needs no pin.
+        with pinned(spark) if join_strategy == "copartition" else contextlib.nullcontext():
+            ranks = statics.withColumn("rank", rank0)
+            for it in range(iters):
+                # The rank state (node, outdeg, rank) is a |V|-row frame; its
+                # ExistingRDD scan carries no stats, so unhinted the planner
+                # would SMJ and re-sort the edge list every round (measured
+                # 31 MB shuffle / ~7 s vs 3 MB / ~2.5 s broadcast at sf0.1).
+                contribs = (
+                    walk.join(bc(ranks), walk.src == ranks.node)
+                    .groupBy("dst")
+                    .agg(F.sum(F.col("rank") / F.col("outdeg")).alias("m"))
                 )
-            else:
-                joined = statics.join(bc(contribs), statics.node == contribs.dst, "left")
-            if directed:
-                # dangling mass: rank held by nodes with no out-edges —
-                # outdeg is ALREADY in the state vector, so this is a
-                # 1-row filtered agg (no anti-join), attached IN-PLAN as
-                # a broadcast cross join (a driver .first() here would
-                # add a blocking job per iteration; 12-dp rounding keeps
-                # both engines' scalars bit-equal).  The arithmetic
-                # mirrors the oracle's parenthesization exactly:
-                # ((1-d)/n + (d·m_dang)/n) + d·contrib.
-                dang = ranks.where(F.col("outdeg").isNull()).agg(
-                    F.round(F.coalesce(F.sum("rank"), F.lit(0.0)), 12).alias("mmbd_dang")
+                base = teleport
+                if statics_clustered:
+                    joined = statics.join(
+                        contribs.hint("merge"), statics.node == contribs.dst, "left"
+                    )
+                else:
+                    joined = statics.join(bc(contribs), statics.node == contribs.dst, "left")
+                if directed:
+                    # dangling mass: rank held by nodes with no out-edges —
+                    # outdeg is ALREADY in the state vector, so this is a
+                    # 1-row filtered agg (no anti-join), attached IN-PLAN as
+                    # a broadcast cross join (a driver .first() here would
+                    # add a blocking job per iteration; 12-dp rounding keeps
+                    # both engines' scalars bit-equal).  The arithmetic
+                    # mirrors the oracle's parenthesization exactly:
+                    # ((1-d)/n + (d·m_dang)/n) + d·contrib.
+                    dang = ranks.where(F.col("outdeg").isNull()).agg(
+                        F.round(F.coalesce(F.sum("rank"), F.lit(0.0)), 12).alias("mmbd_dang")
+                    )
+                    joined = joined.crossJoin(F.broadcast(dang))
+                    base = base + (F.lit(damping) * F.col("mmbd_dang")) / F.lit(float(n_nodes))
+                ranks = truncate(
+                    joined.select(
+                        "node",
+                        "outdeg",
+                        F.round(
+                            base + damping * F.coalesce(F.col("m"), F.lit(0.0)), 12
+                        ).alias("rank"),
+                    ),
+                    it,
                 )
-                joined = joined.crossJoin(F.broadcast(dang))
-                base = base + (F.lit(damping) * F.col("mmbd_dang")) / F.lit(float(n_nodes))
-            ranks = truncate(
-                joined.select(
-                    "node",
-                    "outdeg",
-                    F.round(
-                        base + damping * F.coalesce(F.col("m"), F.lit(0.0)), 12
-                    ).alias("rank"),
-                ),
-                it,
-            )
     finally:
-        if pin:
-            spark.conf.set("spark.sql.shuffle.partitions", old_part)
         walk.unpersist()  # ranks is an eager checkpoint — no lineage into walk
         if statics_clustered:
             statics.unpersist()
@@ -465,7 +451,7 @@ def q_pagerank_directed(spark: SparkSession, sf_dir: str) -> DataFrame:
 _TRI_Q = 0.9  # co-supply strength quantile that defines the graph's edges
 
 
-def triangle_counts(edges: DataFrame, orient: str = "degree") -> DataFrame:
+def triangle_counts(edges: DataFrame) -> DataFrame:
     """Per-node triangle counts over an undirected edge list ``(u, v)``
     (distinct, u < v) — the compact-forward / node-iterator algorithm of
     Suri & Vassilvitskii ("Counting Triangles and the Curse of the Last
@@ -484,16 +470,10 @@ def triangle_counts(edges: DataFrame, orient: str = "degree") -> DataFrame:
 
     Returns (node, deg, tri, lcc): degree, triangle count, and local
     clustering coefficient 2·tri/(deg·(deg−1)) rounded through the
-    portable 6-dp floor form.  All counting is integer-exact.
-
-    ``orient`` selects the orientation order — ``'degree'`` (the
-    (deg, id) order above, the production arm) or ``'id'`` (plain
-    u < v, the textbook-naive arm kept ONLY as the measured
-    counter-example: on a hub of degree k whose id sorts low it fans
-    out C(k,2) wedges where the degree order fans out zero — SCALING.md
-    "Triangle-count orientation" records both arms on one star graph).  Both arms return identical
-    counts; only the wedge volume differs."""
-    deg, oriented, wedges = oriented_wedges(edges, orient)
+    portable 6-dp floor form.  All counting is integer-exact.  (SCALING.md
+    "Triangle-count orientation" measures the (deg, id) order against a
+    plain u < v order on one star graph.)"""
+    deg, oriented, wedges = oriented_wedges(edges)
     # r12 (guide §2.3): the close join shuffles EVERY wedge by its
     # (x, y) pair — the query's dominant exchange (O(m^1.5) wedge rows).
     # Packing the pair into one BIGINT (x<<32 | y; node ids are
@@ -538,11 +518,9 @@ def triangle_counts(edges: DataFrame, orient: str = "degree") -> DataFrame:
     return out.select("node", "deg", "tri", lcc.alias("lcc"))
 
 
-def oriented_wedges(edges: DataFrame, orient: str = "degree"):
+def oriented_wedges(edges: DataFrame):
     """The orientation + wedge-generation stages of triangle_counts.
     Returns (deg, oriented, wedges)."""
-    if orient not in ("degree", "id"):
-        raise ValueError(f"orient must be 'degree' or 'id', got {orient!r}")
     # Materialize the edge list once: it feeds the degree agg, the
     # orientation join, and (through `oriented`) the wedge self-join —
     # without this every consumer re-runs the caller's whole edge-
@@ -569,12 +547,9 @@ def oriented_wedges(edges: DataFrame, orient: str = "degree"):
             "u", "v", F.col("du.d").alias("d_u"), F.col("dv.d").alias("d_v")
         )
     )
-    if orient == "degree":
-        u_first = (F.col("d_u") < F.col("d_v")) | (
-            (F.col("d_u") == F.col("d_v")) & (F.col("u") < F.col("v"))
-        )
-    else:  # 'id': ignore degrees — the skew-blind naive orientation
-        u_first = F.col("u") < F.col("v")
+    u_first = (F.col("d_u") < F.col("d_v")) | (
+        (F.col("d_u") == F.col("d_v")) & (F.col("u") < F.col("v"))
+    )
     oriented = e.select(
         F.when(u_first, F.col("u")).otherwise(F.col("v")).alias("lo"),
         F.when(u_first, F.col("v")).otherwise(F.col("u")).alias("hi"),
@@ -583,12 +558,9 @@ def oriented_wedges(edges: DataFrame, orient: str = "degree"):
     e1, e2 = oriented.alias("e1"), oriented.alias("e2")
     # the wedge pair (x, y) must be emitted in the SAME total order the
     # orientation used, so the closing lookup hits the oriented edge
-    if orient == "degree":
-        wedge_order = (F.col("e1.d_hi") < F.col("e2.d_hi")) | (
-            (F.col("e1.d_hi") == F.col("e2.d_hi")) & (F.col("e1.hi") < F.col("e2.hi"))
-        )
-    else:
-        wedge_order = F.col("e1.hi") < F.col("e2.hi")
+    wedge_order = (F.col("e1.d_hi") < F.col("e2.d_hi")) | (
+        (F.col("e1.d_hi") == F.col("e2.d_hi")) & (F.col("e1.hi") < F.col("e2.hi"))
+    )
     wedges = e1.join(e2, F.col("e1.lo") == F.col("e2.lo")).where(wedge_order).select(
         F.col("e1.lo").alias("ctr"), F.col("e1.hi").alias("x"), F.col("e2.hi").alias("y")
     )
@@ -722,11 +694,10 @@ def label_prop(edges: DataFrame, rounds: int = _LP_ROUNDS) -> DataFrame:
       variant the determinism contract rules out.  The changed-label
       count is an Observation filled by the round's own eager
       checkpoint, so the probe costs no job."""
-    n_part = loop_partitions()
     sym = (
         edges.select(F.col("u").alias("node"), F.col("v").alias("nbr"))
         .unionAll(edges.select(F.col("v").alias("node"), F.col("u").alias("nbr")))
-        .repartition(n_part, "node")
+        .repartition(PARTITIONS, "node")
         .persist()
     )
     # distinct rides sym's node-clustering (no exchange)
@@ -744,12 +715,11 @@ def label_prop(edges: DataFrame, rounds: int = _LP_ROUNDS) -> DataFrame:
             # clustered like votes so the union keeps the node clustering —
             # instead of a per-round broadcast-build job for a prev-label join
             aug = votes.unionByName(
-                labels.repartition(n_part, "node").select(
+                labels.repartition(PARTITIONS, "node").select(
                     "node", "label", F.lit(None).cast("long").alias("cnt")
                 )
             )
-            obs = Observation()
-            stepped = (
+            stepped, changed = settle(
                 aug.groupBy("node")
                 .agg(
                     F.min(
@@ -760,12 +730,11 @@ def label_prop(edges: DataFrame, rounds: int = _LP_ROUNDS) -> DataFrame:
                     ).alias("m"),
                     F.max(F.when(F.col("cnt").isNull(), F.col("label"))).alias("prev"),
                 )
-                .select("node", F.col("m.label").alias("label"), "prev")
-                .observe(obs, F.count_if(F.col("label") != F.col("prev")).alias("n"))
-                .localCheckpoint(eager=True)
+                .select("node", F.col("m.label").alias("label"), "prev"),
+                F.col("label") != F.col("prev"),
             )
             labels = stepped.select("node", "label")
-            if not obs.get["n"]:  # no label changed: fixpoint
+            if not changed:  # no label changed: fixpoint
                 break
     finally:
         sym.unpersist()  # labels is an eager checkpoint — no lineage into sym
@@ -911,16 +880,14 @@ def kcore(edges: DataFrame, k: int = _KCORE_K, rounds: int = _KCORE_ROUNDS) -> D
     filter over the materialized degree blocks."""
     live = edges.localCheckpoint(eager=True)
     for _ in range(rounds):
-        obs = Observation()
-        deg = (
+        deg, below = settle(
             live.select(F.col("u").alias("node"))
             .unionAll(live.select(F.col("v").alias("node")))
             .groupBy("node")
-            .agg(F.count(F.lit(1)).alias("d"))
-            .observe(obs, F.count_if(F.col("d") < k).alias("n"))
-            .localCheckpoint(eager=True)
+            .agg(F.count(F.lit(1)).alias("d")),
+            F.col("d") < k,
         )
-        if not obs.get["n"]:
+        if not below:
             # fixpoint: every surviving vertex already has degree >= k,
             # so the final count-agg over live would reproduce deg exactly
             return deg.select("node", F.col("d").cast("long").alias("core_deg"))
@@ -1144,7 +1111,7 @@ def _relax_edges(edges: DataFrame, semiring: str) -> DataFrame:
     persist keeps the output partitioning (localCheckpoint forgets it),
     so every round's aggregate on ``dst`` rides this one exchange."""
     carry = () if semiring in ("hops", "min_label") else ("w",)
-    return symmetric(edges, *carry).repartition(loop_partitions(), "dst").persist()
+    return symmetric(edges, *carry).repartition(PARTITIONS, "dst").persist()
 
 
 def _relax_round(sym: DataFrame, state: DataFrame, frontier: DataFrame, semiring: str) -> DataFrame:
@@ -1216,14 +1183,10 @@ def relax(edges: DataFrame, seeds: DataFrame, semiring: str, rounds: int) -> Dat
     frontier = state
     try:
         for r in range(rounds + 1):
-            obs = Observation()
-            merged = (
-                _relax_round(sym, state, frontier, semiring)
-                .observe(obs, F.count_if("mmbd_new").alias("n"))
-                .localCheckpoint(eager=True)
+            merged, improved = settle(
+                _relax_round(sym, state, frontier, semiring), F.col("mmbd_new")
             )
             state = merged.select("node", "v")
-            improved = obs.get["n"]
             if not improved:
                 break
             if r == rounds:

@@ -39,8 +39,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.loop import PARTITIONS
 from ..registry import register
-from .graph import _PR_ITERS, loop_partitions
+from .graph import _PR_ITERS
 
 _HITS_ITERS = _PR_ITERS  # 10 — same fixed-unroll contract as PageRank
 
@@ -88,12 +89,11 @@ def hits(edges: DataFrame, iters: int = _HITS_ITERS) -> DataFrame:
     semantics, no per-round recombine join); the full (node, hub, auth)
     frame with exact 0.0 on the off sides is assembled once at the
     end."""
-    n_part = loop_partitions()
     # repartition BEFORE distinct: the dedup rides the one clustering
     # exchange instead of paying its own
-    ed = edges.select("src", "dst").repartition(n_part, "src").distinct().persist()
+    ed = edges.select("src", "dst").repartition(PARTITIONS, "src").distinct().persist()
     # the dst-clustered twin, derived from ed so the dedup is not repeated
-    ed_dst = ed.repartition(n_part, "dst").persist()
+    ed_dst = ed.repartition(PARTITIONS, "dst").persist()
     nodes = (
         ed.select(F.col("src").alias("node"))
         .unionByName(ed.select(F.col("dst").alias("node")))

@@ -28,6 +28,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.loop import pinned
 from ..registry import register
 from ..sources import load
 
@@ -236,20 +237,10 @@ def _bpe_train_distributed(
     round's Arrow kernel (only the rules since the last checkpoint — the
     symbol table is re-materialized every _BPE_CKPT_EVERY rounds so
     per-round work stays flat as the rule list grows)."""
-    import os
-
     spark = words.sparkSession
     base = words.select(
         "w", "freq", F.concat(F.split(F.col("w"), ""), F.array(F.lit(_END))).alias("syms")
     ).localCheckpoint(eager=True)
-
-    # the per-round aggregations run over the tiny distinct-word table —
-    # pin shuffle partitions so 20 rounds don't pay 200-task scheduling
-    # each (same pattern as dedup's MMBD_CC_SHUFFLE_PARTITIONS)
-    n_part = os.environ.get("MMBD_BPE_SHUFFLE_PARTITIONS", "8")
-    ckpt_every = int(os.environ.get("MMBD_BPE_CKPT_EVERY", _BPE_CKPT_EVERY))
-    old_part = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", n_part)
 
     rules: list[tuple[int, str, str, int]] = []
     pending: list[tuple[str, str]] = []  # rules not yet baked into `base`
@@ -276,50 +267,52 @@ def _bpe_train_distributed(
 
         return F.pandas_udf(apply_rules_kernel, "array<string>")
 
+    # the per-round aggregations run over the tiny distinct-word table;
+    # the pin keeps 20 rounds from paying 200-task scheduling each
     try:
-        while len(rules) < n_merges:
-            cur = base.select("w", "freq", make_kernel(list(pending))("syms").alias("syms"))
-            pairs = (
-                cur.select(
-                    "freq",
-                    F.posexplode(
-                        F.slice("syms", 1, F.greatest(F.size("syms") - 1, F.lit(0)))
-                    ).alias("i", "left"),
-                    "syms",
+        with pinned(spark):
+            while len(rules) < n_merges:
+                cur = base.select("w", "freq", make_kernel(list(pending))("syms").alias("syms"))
+                pairs = (
+                    cur.select(
+                        "freq",
+                        F.posexplode(
+                            F.slice("syms", 1, F.greatest(F.size("syms") - 1, F.lit(0)))
+                        ).alias("i", "left"),
+                        "syms",
+                    )
+                    .select("freq", "left", F.expr("syms[i + 1]").alias("right"))
+                    .groupBy("left", "right")
+                    .agg(F.sum("freq").alias("n"))
                 )
-                .select("freq", "left", F.expr("syms[i + 1]").alias("right"))
-                .groupBy("left", "right")
-                .agg(F.sum("freq").alias("n"))
-            )
-            # one Spark job per SCAN, not per rule: fetch the top-M ranked
-            # pairs and accept the provably-safe batch (see
-            # _safe_merge_batch) — n_merges rules typically need only a
-            # handful of scans instead of n_merges sequential jobs
-            top = (
-                pairs.orderBy(F.desc("n"), F.asc("left"), F.asc("right"))
-                .limit(_BPE_BATCH_TOPM)
-                .collect()
-            )
-            ranked = [(r["left"], r["right"], int(r["n"])) for r in top if r["n"] >= 2]
-            if not ranked:
-                break  # vocabulary exhausted: nothing left worth merging
-            batch = _safe_merge_batch(
-                ranked,
-                exhaustive=len(top) < _BPE_BATCH_TOPM,
-                limit=n_merges - len(rules),
-            )
-            for left, right, n in batch:
-                rules.append((len(rules), left, right, n))
-                pending.append((left, right))
-            if len(pending) >= ckpt_every:
-                old_base = base
-                base = base.select(
-                    "w", "freq", make_kernel(list(pending))("syms").alias("syms")
-                ).localCheckpoint(eager=True)
-                pending.clear()
-                old_base.unpersist()
+                # one Spark job per SCAN, not per rule: fetch the top-M ranked
+                # pairs and accept the provably-safe batch (see
+                # _safe_merge_batch) — n_merges rules typically need only a
+                # handful of scans instead of n_merges sequential jobs
+                top = (
+                    pairs.orderBy(F.desc("n"), F.asc("left"), F.asc("right"))
+                    .limit(_BPE_BATCH_TOPM)
+                    .collect()
+                )
+                ranked = [(r["left"], r["right"], int(r["n"])) for r in top if r["n"] >= 2]
+                if not ranked:
+                    break  # vocabulary exhausted: nothing left worth merging
+                batch = _safe_merge_batch(
+                    ranked,
+                    exhaustive=len(top) < _BPE_BATCH_TOPM,
+                    limit=n_merges - len(rules),
+                )
+                for left, right, n in batch:
+                    rules.append((len(rules), left, right, n))
+                    pending.append((left, right))
+                if len(pending) >= _BPE_CKPT_EVERY:
+                    old_base = base
+                    base = base.select(
+                        "w", "freq", make_kernel(list(pending))("syms").alias("syms")
+                    ).localCheckpoint(eager=True)
+                    pending.clear()
+                    old_base.unpersist()
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_part)
         # release the final checkpoint's cached blocks (earlier ones are
         # unpersisted at each checkpoint boundary above) — without this,
         # every training call leaks one localCheckpoint until session end

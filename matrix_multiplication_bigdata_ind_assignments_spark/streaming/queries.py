@@ -15,13 +15,13 @@ path (rows-only).
 
 from __future__ import annotations
 
-import contextlib
 import itertools
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.loop import pinned
 from ..functions.numeric import dec_sum, sql_dec_sum
 from ..operators import aggregates as _AGG
 from ..operators.dedup import _SQL_MINHASH_BANDS_CTES
@@ -38,24 +38,12 @@ _sink_counter = itertools.count()
 _EPOCH_INDEX: dict = {}
 
 
-@contextlib.contextmanager
-def _state_partitions(spark: SparkSession):
-    """Pin spark.sql.shuffle.partitions while a streaming query starts.
-
-    The state-store partition count is bound at .start() from this conf and
-    every micro-batch pays per-partition state machinery, so 64 partitions
-    of near-empty state dominate small replays (sf0.1 tumbling: 1.6s → 0.8s
-    at 8).  Tunable via MMBD_STREAM_SHUFFLE_PARTITIONS — raise it for real
-    volumes; state partitions, unlike shuffle partitions, cannot change
-    across restarts of the same checkpointed query.
-    """
-    n = os.environ.get("MMBD_STREAM_SHUFFLE_PARTITIONS", "8")
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", n)
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
+# Every stream here starts under ``pinned``: the state-store partition
+# count is bound at .start() from spark.sql.shuffle.partitions, and every
+# micro-batch pays per-partition state machinery, so 64 partitions of
+# near-empty state dominate small replays (sf0.1 tumbling: 1.6 s → 0.8 s
+# at 8).  State partitions, unlike shuffle partitions, cannot change
+# across restarts of the same checkpointed query.
 
 
 def _await_batches(q, target_batch_id: int, timeout_s: float = 120.0) -> None:
@@ -124,7 +112,7 @@ def _run_to_memory(stream_df: DataFrame, mode: str = "complete") -> DataFrame:
     return the materialized result."""
     spark = stream_df.sparkSession
     name = f"mmbd_sink_{next(_sink_counter)}"
-    with _state_partitions(spark):
+    with pinned(spark):
         q = (
             stream_df.writeStream.format("memory")
             .queryName(name)
@@ -267,7 +255,7 @@ def q_stream_foreach_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.write.mode("overwrite").parquet(f"{out}/batch={batch_id}")
 
-    with _state_partitions(spark):
+    with pinned(spark):
         q = s.writeStream.foreachBatch(sink).trigger(availableNow=True).start()
         q.awaitTermination()
     landed = spark.read.parquet(f"{out}/batch=*")
@@ -615,7 +603,7 @@ def q_stream_rate_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("total"))
     )
     name = f"mmbd_sink_{next(_sink_counter)}"
-    with _state_partitions(spark):
+    with pinned(spark):
         q = (
             agg.writeStream.format("memory")
             .queryName(name)
@@ -823,7 +811,7 @@ def q_stream_python_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n"), F.round(F.sum("v"), 6).alias("row_sum")
     )
     name = f"mmbd_sink_{next(_sink_counter)}"
-    with _state_partitions(spark):
+    with pinned(spark):
         q = (
             agg.writeStream.format("memory")
             .queryName(name)

@@ -273,20 +273,6 @@ def test_triangle_count_fixture_is_k4(spark, sf_dir):
     assert all((r["deg"], r["tri"], r["lcc"]) == (3, 3, 1.0) for r in rows)
 
 
-def test_triangle_counts_id_arm_identical(spark):
-    """The naive id orientation (the probe's counter-example arm) must
-    count identically to the degree orientation — on a seeded random
-    graph dense enough to exercise every tie/order branch."""
-    import random
-
-    rng = random.Random(42)
-    edges = sorted({tuple(sorted(rng.sample(range(30), 2))) for _ in range(160)})
-    df = spark.createDataFrame(edges, "u long, v long")
-    assert _tri_map(G.triangle_counts(df, orient="degree")) == _tri_map(
-        G.triangle_counts(df, orient="id")
-    )
-
-
 def test_kcore_path_and_clique(spark):
     """A 6-path (2-core empty: endpoints peel inward round by round)
     glued to a 5-clique (4-core = the clique, every in-core degree 4)

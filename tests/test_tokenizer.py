@@ -51,7 +51,7 @@ def test_bpe_train_matches_sequential_reference(spark, monkeypatch):
     # checkpointed distributed path: 12 merges over a 3-round checkpoint
     # cadence crosses 3 re-materialization boundaries and must still be
     # rule-for-rule identical (the delta-replay fix, VERDICT r3 item 3)
-    monkeypatch.setenv("MMBD_BPE_CKPT_EVERY", "3")
+    monkeypatch.setattr(T, "_BPE_CKPT_EVERY", 3)
     assert T.bpe_train(words, n_merges=12) == expected
 
 
