@@ -192,9 +192,8 @@ def main() -> int:
         extra_conf={
             "spark.ui.enabled": "true",
             "spark.executor.processTreeMetrics.enabled": "true",
-            # shuffle-byte deltas (functions.metrics) are computed from
-            # cumulative stage totals — keep every bench stage resident so
-            # no eviction happens inside a measurement window
+            # keep every bench stage resident so no eviction happens
+            # inside a measurement window (functions.metrics.measure)
             "spark.ui.retainedStages": "40000",
             "spark.ui.retainedJobs": "40000",
         },
@@ -202,13 +201,9 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
 
     from matrix_multiplication_bigdata_ind_assignments_spark.functions.metrics import (
-        executor_peak_mb as _exec_peak,
+        executor_peak_mb,
+        measure,
     )
-
-    def executor_peak_mb() -> float | None:
-        """Peak executor memory via the shared REST helper
-        (functions.metrics.executor_peak_mb); None if unpollable."""
-        return _exec_peak(spark)
 
     qs = registry.queries()
 
@@ -551,11 +546,6 @@ def main() -> int:
     # not the plan.  SPARK_GRAFT_BENCH_WARMUP=0 restores cold-run timing.
     warmup = int(os.environ.get("SPARK_GRAFT_BENCH_WARMUP", "1"))
     repeats = int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "3"))
-    from matrix_multiplication_bigdata_ind_assignments_spark.functions.metrics import (
-        settled_snapshot,
-        shuffle_delta,
-    )
-
     timings: dict[str, float] = {}
     timings_mean: dict[str, float] = {}
     exec_peak_after: dict[str, float] = {}
@@ -565,27 +555,22 @@ def main() -> int:
     for name, thunk in benches.items():
         for _ in range(warmup):
             thunk()
-        times = []
-        for rep in range(repeats):
-            # shuffle bytes around the FIRST timed repeat only (they are a
-            # property of the plan, identical per repeat); both snapshots
-            # sit OUTSIDE the wall-clock window and both edges are settled
-            # (metrics.settled_snapshot) so lagging bus events from the
-            # warm-up can't leak into the window
-            if rep == 0:
-                snap0 = settled_snapshot(spark)
+        # shuffle bytes from the FIRST timed repeat only (they are a
+        # property of the plan, identical per repeat); the later repeats
+        # are plain laps
+        d = measure(spark, thunk)
+        times = [d["wall_s"]]
+        for _ in range(repeats - 1):
             t0 = time.perf_counter()
             thunk()
             times.append(time.perf_counter() - t0)
-            if rep == 0:
-                d = shuffle_delta(snap0, settled_snapshot(spark))
-                shuffle_mb[name] = round(d["shuffle_write_bytes"] / 1048576, 2)
-                shuffle_full[name] = {
-                    "read_mb": round(d["shuffle_read_bytes"] / 1048576, 2),
-                    "write_mb": round(d["shuffle_write_bytes"] / 1048576, 2),
-                    "spill_mem_mb": round(d["spill_memory_bytes"] / 1048576, 2),
-                    "spill_disk_mb": round(d["spill_disk_bytes"] / 1048576, 2),
-                }
+        shuffle_mb[name] = round(d["shuffle_write_bytes"] / 1048576, 2)
+        shuffle_full[name] = {
+            "read_mb": round(d["shuffle_read_bytes"] / 1048576, 2),
+            "write_mb": round(d["shuffle_write_bytes"] / 1048576, 2),
+            "spill_mem_mb": round(d["spill_memory_bytes"] / 1048576, 2),
+            "spill_disk_mb": round(d["spill_disk_bytes"] / 1048576, 2),
+        }
         # Headline "queries" uses min over repeats (steady state, robust to
         # background load spikes observed at ±40% on shared hardware);
         # "queries_mean" records the avg-of-repeats number BASELINE.md's
@@ -595,7 +580,7 @@ def main() -> int:
         timings[name] = round(min(times), 3)
         timings_mean[name] = round(sum(times) / len(times), 3)
         query_sentinel[name] = [gemm_sentinel(best=True), round(os.getloadavg()[0], 1)]
-        pk = executor_peak_mb()
+        pk = executor_peak_mb(spark)
         if pk is not None:
             # executor peaks are monotonic since JVM start, so this is the
             # peak-so-far AFTER this query — a jump attributes the high-water

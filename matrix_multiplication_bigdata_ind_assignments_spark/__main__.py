@@ -32,7 +32,7 @@ ALGOS = ("basic", "transposed", "blocked", "sparse", "broadcast", "auto")
 def _cmd_run(args: argparse.Namespace) -> int:
     from pyspark.sql import functions as F
 
-    from .functions.metrics import executor_peak_mb, settled_snapshot, shuffle_delta
+    from .functions.metrics import executor_peak_mb, measure
     from .operators import matrix as M
     from .session import get_spark
 
@@ -81,18 +81,20 @@ def _cmd_run(args: argparse.Namespace) -> int:
         }[args.algo]
         left = M.transpose(M.transpose(A)) if args.algo == "transposed" else A
         times = []
-        snap0 = settled_snapshot(spark)
-        for _ in range(args.repeats):
-            t0 = time.perf_counter()
-            M.multiply(left, B, strategy=strategy, block_size=args.block).write.format(
-                "noop"
-            ).mode("overwrite").save()
-            times.append((time.perf_counter() - t0) * 1000)
-        # per-node resources for this size's reps: shuffle bytes from the
-        # stage-total deltas (deterministic plan signal), executor peak
+
+        def reps():
+            for _ in range(args.repeats):
+                t0 = time.perf_counter()
+                M.multiply(left, B, strategy=strategy, block_size=args.block).write.format(
+                    "noop"
+                ).mode("overwrite").save()
+                times.append((time.perf_counter() - t0) * 1000)
+
+        # per-node resources for this size's reps: shuffle bytes from one
+        # measurement window (deterministic plan signal), executor peak
         # memory from the REST metrics API (monotonic since JVM start —
         # the peak-so-far AFTER this size attributes a jump to it)
-        d = shuffle_delta(snap0, settled_snapshot(spark))
+        d = measure(spark, reps)
         peak = executor_peak_mb(spark)
         rss_mb = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss / 1024
         extra = json.dumps({"block": args.block, "density": args.density, "sf_dir": args.sf_dir})

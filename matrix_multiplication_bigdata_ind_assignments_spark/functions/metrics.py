@@ -1,43 +1,45 @@
-"""Execution-metric capture: per-window shuffle read/write bytes and
-spill, from Spark's AppStatusStore (VERDICT r6 item 1).
+"""Execution metrics: one measurement window over Spark's AppStatusStore,
+plus executor peak memory.
 
-Why: at local[32] wall time cannot distinguish a plan regression from
-box noise (r6 measured ±30% swings on UNCHANGED code), but shuffle
-bytes are a property of the physical plan + data — deterministic across
-runs — and they are exactly the quantity that decides whether a plan
-survives a 100× scale-up.  bench.py records them per query; tests
-assert byte envelopes on the plan-guarded queries.
+``measure(spark, thunk)`` is the one place that sets a job group or reads
+stage totals.  Its invariants:
 
-The AppStatusStore is the store behind the UI/REST API but is populated
-even with ``spark.ui.enabled=false``, so the same helper serves bench
-(UI on) and tests (UI off).  Access is via py4j — ``statusStore()`` is
-``private[spark]`` in Scala, which is public in bytecode; the Scala
-default arguments of ``stageList`` are materialized through their
-compiler-generated ``stageList$default$N`` accessors.  Those accessors
-are version-sensitive, so the whole store path is guarded: on any
-py4j/reflection failure it raises ``ShuffleMetricsUnavailable`` (a
-clearly-named signal the envelope tests turn into a skip) instead of
-crashing every UI-off session on an unanticipated Spark build
-(ADVICE r7, medium).
+- **What a window charges.**  The window opens at the highest stage id
+  in the store and charges every stage whose id is above it: stage ids
+  grow monotonically, so those are exactly the stages submitted after
+  the window opened.  Each attempt of a stage is charged.  Jobs are
+  counted by the window's own job group.  Shuffle bytes are a property
+  of the physical plan and the data, not of box load, so they are the
+  deterministic signal that wall time is not.
+- **Both edges are settled.**  The AppStatusListener consumes events on
+  an asynchronous bus that can lag an action's return by a beat.  An
+  unsettled opening edge could miss a stage of earlier work that is
+  still being registered and charge it to the window; an unsettled
+  closing edge would undercount work that just finished.  Each edge is
+  polled until two consecutive reads agree.
+- **One path, UI on or off.**  The store is populated whether or not
+  ``spark.ui.enabled`` is set, and it is read through its KVStore
+  ``stageId`` index only: the opening edge reads one row of the reverse
+  index, the closing edge starts its scan above the opening id, so the
+  py4j cost is O(stages in the window).  ``statusStore()`` is
+  ``private[spark]`` in Scala (public in bytecode); if this build's store
+  has another shape, the call raises ``ShuffleMetricsUnavailable``.
+- **Eviction.**  The store keeps at most ``spark.ui.retainedStages``
+  stages (default 1000).  A stage of the window evicted before the
+  closing edge is not charged, so sessions that measure long runs raise
+  that limit (bench, the probe and the tests do).
+- **Concurrent threads.**  The window charges any stage another thread
+  runs inside it, and the job count covers only this thread's jobs.
+  Measure from one thread at a time.
 
-Caveat: the store evicts old stages beyond ``spark.ui.retainedStages``
-(default 1000).  Deltas are computed from cumulative totals, so a
-measurement window must not span an eviction of stages *inside* the
-window — bench raises retainedStages; test windows are a handful of
-stages.  ``measure_shuffle`` additionally bounds the *cost* of the
-store path to O(window) — genuinely, not just by skipping field getters
-(the r8 review found the first cut still paid 3 py4j round trips per
-retained stage on both edges): iteration skips pre-window stages
-SERVER-SIDE via the KVStore's ``stageId`` index (``view.index(
-"stageId").first(floor+1)``), and the opening edge starts from a
-module-level per-application floor cache (the max stage id ANY previous
-snapshot saw), so a snapshot never re-walks stages an earlier snapshot
-already counted.  (ADVICE r7: with UI off each full snapshot was ~4
-py4j round trips per retained stage, so late-suite envelope tests
-degraded linearly in suite length.)
+``executor_peak_mb`` reads the REST API instead: only REST exposes the
+executors' peak memory, so it needs the UI on.
 """
 
 from __future__ import annotations
+
+import time
+import uuid
 
 from pyspark.sql import SparkSession
 
@@ -48,148 +50,88 @@ _FIELDS = {
     "spill_disk_bytes": "diskBytesSpilled",
 }
 
-# applicationId → largest stage id any snapshot of that app has seen.
-# Lets measure_shuffle's OPENING edge start its iteration there instead
-# of walking every retained stage: stages at or below the cached floor
-# were registered before any current window opened, so re-reading them
-# can never change a window's membership.
-_FLOOR_CACHE: dict[str, int] = {}
-
 
 class ShuffleMetricsUnavailable(RuntimeError):
     """The AppStatusStore could not be read on this Spark build (the
-    ``private[spark]`` accessors the UI-off path relies on changed
-    shape).  Callers that merely *observe* metrics should degrade
-    (envelope tests skip via conftest); nothing correctness-bearing
+    ``private[spark]`` accessors changed shape).  Callers that merely
+    observe metrics degrade (the tests skip); nothing correctness-bearing
     depends on this module."""
 
 
-def shuffle_snapshot(spark: SparkSession, since_stage_id: int = -1) -> dict[str, int]:
-    """Cumulative shuffle/spill byte totals over the retained stages with
-    ``stageId > since_stage_id`` (default: all), plus ``max_stage_id``
-    (the largest stage id seen, or ``since_stage_id`` if none).
-    Subtract two snapshots (``shuffle_delta``) to charge the stages run
-    in between, or pass the first snapshot's ``max_stage_id`` as
-    ``since_stage_id`` of the second to charge only window-new stages.
+def _stages(spark: SparkSession):
+    """The store's stages as a KVStore view ordered by stage id."""
+    sc = spark.sparkContext
+    cls = sc._jvm.java.lang.Class.forName("org.apache.spark.status.StageDataWrapper")
+    return sc._jsc.sc().statusStore().store().view(cls).index("stageId")
 
-    Two access paths over the same store: when the UI is up (bench), ONE
-    REST call returns every stage as JSON — constant py4j traffic no
-    matter how many stages have accumulated; with the UI off (tests),
-    iterate the store's KVStore through its ``stageId`` index, which
-    skips stages ≤ ``since_stage_id`` server-side so the py4j traffic is
-    ~6 round trips per IN-WINDOW stage attempt and zero per skipped
-    stage.  (A ``stageList``-based fallback covers builds where the
-    KVStore index shape differs.)"""
-    app = spark.sparkContext.applicationId
-    base = spark.sparkContext.uiWebUrl
-    if base:
-        try:
-            import json
-            import urllib.request
 
-            with urllib.request.urlopen(f"{base}/api/v1/applications/{app}/stages", timeout=10) as r:
-                stages = json.load(r)
-            stages = [s for s in stages if int(s.get("stageId", -1)) > since_stage_id]
-            out = {
-                k: sum(int(s.get(meth, 0)) for s in stages) for k, meth in _FIELDS.items()
-            }
-            out["max_stage_id"] = max(
-                (int(s.get("stageId", -1)) for s in stages), default=since_stage_id
-            )
-            _FLOOR_CACHE[app] = max(_FLOOR_CACHE.get(app, -1), out["max_stage_id"])
-            return out
-        except Exception:
-            pass  # UI race/shutdown → the store path below still works
+def _top_stage_id(spark: SparkSession) -> int:
+    it = _stages(spark).reverse().max(1).closeableIterator()
     try:
-        ss = spark.sparkContext._jsc.sc().statusStore()
-        tot = dict.fromkeys(_FIELDS, 0)
-        max_id = since_stage_id
-        try:
-            # O(window): StageDataWrapper carries a @KVIndex("stageId"),
-            # so .first(floor+1) starts the store scan at the window
-            cls = spark.sparkContext._jvm.java.lang.Class.forName(
-                "org.apache.spark.status.StageDataWrapper"
-            )
-            it = ss.store().view(cls).index("stageId").first(since_stage_id + 1).closeableIterator()
-            try:
-                while it.hasNext():
-                    info = it.next().info()
-                    sid = info.stageId()
-                    if sid <= since_stage_id:
-                        continue
-                    max_id = max(max_id, sid)
-                    for k, meth in _FIELDS.items():
-                        tot[k] += getattr(info, meth)()
-            finally:
-                it.close()
-        except Exception:
-            # index shape differs on this build → full stageList walk
-            defaults = [getattr(ss, f"stageList$default${i}")() for i in range(2, 6)]
-            stages = ss.stageList(None, *defaults)
-            tot = dict.fromkeys(_FIELDS, 0)
-            max_id = since_stage_id
-            it = stages.iterator()
-            while it.hasNext():
-                s = it.next()
-                sid = s.stageId()
-                if sid <= since_stage_id:
-                    continue
-                max_id = max(max_id, sid)
-                for k, meth in _FIELDS.items():
-                    tot[k] += getattr(s, meth)()
-        tot["max_stage_id"] = max_id
-        _FLOOR_CACHE[app] = max(_FLOOR_CACHE.get(app, -1), max_id)
-        return tot
+        return it.next().info().stageId() if it.hasNext() else -1
+    finally:
+        it.close()
+
+
+def _totals_above(spark: SparkSession, stage_id: int) -> dict[str, int]:
+    tot = dict.fromkeys(_FIELDS, 0)
+    it = _stages(spark).first(stage_id + 1).closeableIterator()
+    try:
+        while it.hasNext():
+            info = it.next().info()
+            for k, meth in _FIELDS.items():
+                tot[k] += getattr(info, meth)()
+    finally:
+        it.close()
+    return tot
+
+
+def _settled(read):
+    """``read()`` polled until two consecutive results agree (at most 2 s)."""
+    try:
+        val = read()
+        for _ in range(20):
+            time.sleep(0.1)
+            nxt = read()
+            if nxt == val:
+                break
+            val = nxt
+        return val
     except Exception as e:  # py4j reflection against private[spark] API
         raise ShuffleMetricsUnavailable(
-            "AppStatusStore access failed on this Spark build (UI-off "
-            "py4j path uses private accessors pinned against pyspark "
-            "4.1.x); shuffle-byte envelopes cannot run here"
+            "AppStatusStore access failed on this Spark build (the stageId "
+            "index of StageDataWrapper is pinned against pyspark 4.1.x)"
         ) from e
 
 
-def shuffle_delta(before: dict[str, int], after: dict[str, int]) -> dict[str, int]:
-    """Byte deltas between two snapshots (clamped at 0: an eviction of
-    pre-window stages can only LOWER the cumulative totals)."""
-    return {k: max(0, after[k] - before[k]) for k in _FIELDS}
+def measure(spark: SparkSession, thunk) -> dict:
+    """Run ``thunk()`` in one measurement window and return its
+    ``wall_s``, ``jobs``, ``shuffle_read_bytes``, ``shuffle_write_bytes``,
+    ``spill_memory_bytes`` and ``spill_disk_bytes``.
 
-
-def settled_snapshot(spark: SparkSession, since_stage_id: int = -1) -> dict[str, int]:
-    """``shuffle_snapshot`` polled until two consecutive reads agree: the
-    AppStatusListener consumes events on an async bus that can lag an
-    action's return by a beat, so an un-settled read both undercounts
-    work that just finished AND leaks it into the NEXT window's delta.
-    Use this on BOTH edges of a measurement window (bench.py does)."""
-    import time
-
-    snap = shuffle_snapshot(spark, since_stage_id)
-    for _ in range(20):
-        time.sleep(0.1)
-        nxt = shuffle_snapshot(spark, since_stage_id)
-        if nxt == snap:
-            break
-        snap = nxt
-    return snap
-
-
-def measure_shuffle(spark: SparkSession, thunk) -> dict[str, int]:
-    """Run ``thunk()`` and return the shuffle/spill bytes its jobs moved.
-
-    Both window edges settled (see ``settled_snapshot``); the closing
-    edge iterates only stages submitted after the opening edge, so the
-    py4j cost of the UI-off path is O(stages in the window), not
-    O(stages retained since session start).  The window total IS the
-    closing snapshot (no subtraction): stages at or before the opening
-    edge's ``max_stage_id`` are excluded at the source, which also stops
-    late byte-updates from pre-window stragglers being mischarged to the
-    window.  The opening edge starts its scan at the per-application
-    floor cache — stages a previous snapshot already counted can't
-    change window membership, so re-reading them is pure py4j waste."""
-    start = _FLOOR_CACHE.get(spark.sparkContext.applicationId, -1)
-    floor = settled_snapshot(spark, since_stage_id=start)["max_stage_id"]
-    thunk()
-    win = settled_snapshot(spark, since_stage_id=floor)
-    return {k: win[k] for k in _FIELDS}
+    The window charges the stages submitted after it opens and the jobs
+    of its own job group (see the module docstring; a stage another
+    thread runs inside the window is charged too).  ``wall_s`` times
+    ``thunk()`` alone; the settling of both edges lies outside it.  The
+    job group is cleared on exit, also when ``thunk()`` raises, whose
+    error propagates unchanged."""
+    sc = spark.sparkContext
+    group = f"measure-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        opening = _settled(lambda: _top_stage_id(spark))
+        t0 = time.perf_counter()
+        thunk()
+        wall_s = time.perf_counter() - t0
+        jobs, totals = _settled(
+            lambda: (
+                len(sc.statusTracker().getJobIdsForGroup(group)),
+                _totals_above(spark, opening),
+            )
+        )
+    finally:
+        sc._jsc.clearJobGroup()
+    return {"wall_s": wall_s, "jobs": jobs, **totals}
 
 
 def executor_peak_mb(spark: SparkSession) -> float | None:

@@ -27,8 +27,8 @@ Scale shape (the canonical distributed Lloyd, Spark-first):
   their previous centroid (left-join coalesce), mirroring the oracle.
 - The loop state (k·d centroid rows) is localCheckpoint'ed each
   iteration — the PageRank lineage-truncation discipline; at 1000
-  executors swap for .checkpoint() cadence exactly as graph.pagerank's
-  checkpoint_every knob documents.
+  executors swap it for a reliable checkpoint, as ``loop.settle``'s
+  docstring notes.
 
 Cross-engine fp note: embeddings are unit-norm (values O(1), distances
 ≤ 4), so the 12-dp quantum sits ~100× above the ~d·eps ≈ 1.4e-14

@@ -36,7 +36,6 @@ def pagerank(
     iters: int = _PR_ITERS,
     directed: bool = False,
     seed_mod: int | None = None,
-    checkpoint_every: int | None = None,
     join_strategy: str = "broadcast",
 ) -> DataFrame:
     """Power-method PageRank over an edge list ``(src, dst)``.
@@ -71,17 +70,6 @@ def pagerank(
     makes the unrolled-CTE oracle bit-comparable (summation order
     differs between engines; rounding every round stops drift from
     compounding).
-
-    ``checkpoint_every`` (OFF for the oracle-checked default): every
-    k-th truncation uses RELIABLE ``.checkpoint()`` (requires
-    ``spark.sparkContext.setCheckpointDir``) instead of
-    ``localCheckpoint`` — localCheckpoint pins blocks to executors, so
-    on a real cluster an executor loss mid-iteration kills the job; a
-    reliable checkpoint cadence bounds recomputation to k iterations.
-    The knob covers EVERY non-recomputable frame the loop re-reads: the
-    rank iterates AND the static (node, outdeg) vector (the persisted
-    edge list keeps its lineage, so it recomputes on block loss without
-    help).  Local runs keep the (faster) localCheckpoint default.
 
     ``join_strategy`` picks how the |V|-row frames (ranks, statics,
     contribs) meet the persisted edge list each iteration:
@@ -129,28 +117,20 @@ def pagerank(
     # statics, 3,568 → 8,650 B/iter at sf0.001): its contribs aggregate
     # pays a real exchange that AQE coalesces below PARTITIONS, so a clustered
     # statics mismatches and AQE re-exchanges a side per iteration; a
-    # checkpointed statics lets both join sides coalesce together.  The
-    # reliable-checkpoint knob checkpoints reliably: a localCheckpoint'ed
-    # frame re-read by every iteration is exactly the block an executor
-    # loss makes unrecoverable.
-    statics_clustered = join_strategy == "broadcast" and not checkpoint_every
+    # checkpointed statics lets both join sides coalesce together.
+    statics_clustered = join_strategy == "broadcast"
 
     def truncate(df: DataFrame, it: int) -> DataFrame:
         """Lineage truncation, every ``_PR_TRUNCATE_EVERY``-th iteration
         (the final iteration always truncates so the returned frame is an
         eager checkpoint with no lineage into the unpersisted walk)."""
-        reliable = bool(checkpoint_every) and (it + 1) % checkpoint_every == 0
-        if (it + 1) % _PR_TRUNCATE_EVERY != 0 and it != iters - 1 and not reliable:
+        if (it + 1) % _PR_TRUNCATE_EVERY != 0 and it != iters - 1:
             return df  # skip: lineage depth stays < _PR_TRUNCATE_EVERY
-        if reliable:
-            return df.checkpoint(eager=True)
         return df.localCheckpoint(eager=True)
 
     try:
         if statics_clustered:
             statics = statics.persist()
-        elif checkpoint_every:
-            statics = statics.checkpoint(eager=True)
         else:
             statics = statics.localCheckpoint(eager=True)
         if seed_mod is None:
@@ -864,11 +844,11 @@ def kcore(edges: DataFrame, k: int = _KCORE_K, rounds: int = _KCORE_ROUNDS) -> D
     Scale shape: each round is one map-side-combinable degree agg over
     the live edges plus two equi-semi-joins against the ≥k vertex set —
     no theta joins, no per-vertex iteration.  The loop state (the live
-    edge set) shrinks monotonically and is localCheckpoint'ed per round
-    (swap for .checkpoint() cadence on a real cluster, the
-    graph.pagerank checkpoint_every discipline).  At 100 TB this is the
-    standard distributed peeling: O(rounds) passes, each linear in the
-    surviving edges.
+    edge set) shrinks monotonically and is localCheckpoint'ed per round,
+    as is the degree table through ``loop.settle`` (swap both for a
+    reliable checkpoint on a cluster that can lose executors, as that
+    docstring notes).  At 100 TB this is the standard distributed
+    peeling: O(rounds) passes, each linear in the surviving edges.
 
     Fixpoint: a round whose degree table has NO vertex below the bound
     removes nothing, and so does every later round (peeling is

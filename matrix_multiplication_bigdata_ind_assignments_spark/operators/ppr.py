@@ -10,8 +10,10 @@ a pure function of the node id, so both engines derive it from the
 data, and the teleport is a per-node expression instead of the uniform
 scalar.  It shares q_pagerank's oracle recipe: fixed 10 rounds, 12-dp
 in-plan rounding each round so the unrolled DuckDB CTEs are
-bit-comparable despite summation-order differences; both join arms and
-the reliable-checkpoint cadence apply unchanged.
+bit-comparable despite summation-order differences; both join arms
+apply unchanged.  The loop truncates lineage with local checkpoints;
+swap them for reliable ones on a cluster that can lose executors, as
+``loop.settle``'s docstring notes.
 """
 
 from __future__ import annotations

@@ -10,6 +10,8 @@ from matrix_multiplication_bigdata_ind_assignments_spark.operators.graph import 
     trade_edges,
 )
 
+from conftest import measured
+
 # jobs one q_closeness_landmarks call launches at sf0.001 (edge and
 # seed-state checkpoints, one checkpoint per BFS round with the
 # empty-frontier probe riding it as an Observation, then the result); a
@@ -133,12 +135,5 @@ def test_query_job_count_bounded(spark, sf_dir):
     two jobs of the level-set loop's count.  A byte envelope cannot catch
     a return to per-round pair tables here (sf0.001 shuffle writes differ
     by less than its band); the job count does."""
-    sc = spark.sparkContext
-    group = "test:closeness-jobs"
-    sc.setJobGroup(group, group)
-    try:
-        q_closeness_landmarks(spark, sf_dir).collect()
-        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-    finally:
-        sc._jsc.clearJobGroup()
+    jobs = measured(spark, lambda: q_closeness_landmarks(spark, sf_dir).collect())["jobs"]
     assert jobs <= _CLOSENESS_JOBS_SF0001 + 2, jobs

@@ -4,7 +4,7 @@ from pyspark.sql import functions as F
 
 from matrix_multiplication_bigdata_ind_assignments_spark.operators import dedup as D
 
-from conftest import count_jobs
+from conftest import measured
 
 
 def _docs(spark):
@@ -148,7 +148,7 @@ def test_components_query_job_count_bounded(spark, sf_dir):
     """One q_dedup_components call (plan build + collect) stays within two
     jobs of the probe-free count."""
     D.q_dedup_minhash(spark, sf_dir)  # memoizes the hot-bucket probe
-    jobs = count_jobs(spark, "test:cc-jobs", lambda: D.q_dedup_components(spark, sf_dir).collect())
+    jobs = measured(spark, lambda: D.q_dedup_components(spark, sf_dir).collect())["jobs"]
     assert jobs <= _CC_JOBS_SF0001 + 2, jobs
 
 

@@ -5,7 +5,7 @@ from pyspark.sql import functions as F
 
 from matrix_multiplication_bigdata_ind_assignments_spark.operators import graph as G
 
-from conftest import count_jobs
+from conftest import measured
 
 
 def _trade_edges(spark, sf_dir):
@@ -97,11 +97,6 @@ def test_pagerank_copartition_loop_shuffle_is_rank_sized(spark, sf_dir):
     0.4×–1.6× band as tests/test_metrics.py.  A plan regression that
     re-exchanges the |E|-row edge list each round (the r6 class) lands
     ~10× over the ceiling."""
-    from matrix_multiplication_bigdata_ind_assignments_spark.functions.metrics import (
-        ShuffleMetricsUnavailable,
-        measure_shuffle,
-    )
-
     edges = _trade_edges(spark, sf_dir)
     per = {}
     for iters in (1, 11):
@@ -112,25 +107,9 @@ def test_pagerank_copartition_loop_shuffle_is_rank_sized(spark, sf_dir):
             ).mode("overwrite").save()
 
         run()  # warm
-        try:
-            per[iters] = measure_shuffle(spark, run)["shuffle_write_bytes"]
-        except ShuffleMetricsUnavailable as e:
-            pytest.skip(f"shuffle metrics unavailable on this Spark build: {e}")
+        per[iters] = measured(spark, run)["shuffle_write_bytes"]
     per_iter = (per[11] - per[1]) / 10
     assert 0.4 * 3_587 <= per_iter <= 1.6 * 3_587, per
-
-
-def test_pagerank_reliable_checkpoint_cadence(spark, tmp_path):
-    """checkpoint_every=k (reliable checkpoints) must not change the
-    result — it only swaps the lineage-truncation mechanism."""
-    spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
-    edges = spark.createDataFrame([(1, 2), (2, 3), (3, 1)], "src long, dst long")
-    plain = sorted(tuple(r) for r in G.pagerank(spark, edges, iters=6).collect())
-    ck = sorted(
-        tuple(r)
-        for r in G.pagerank(spark, edges, iters=6, checkpoint_every=3).collect()
-    )
-    assert plain == ck
 
 
 # jobs one q_pagerank call launches at sf0.001 (statics materialization
@@ -182,7 +161,7 @@ def test_pagerank_query_job_count_bounded(spark, sf_dir):
     """One q_pagerank call (plan build + collect) stays within two jobs of
     the setup-from-the-walk count.  The setup's extra jobs are invisible
     to the loop-only byte envelopes; the job count sees them."""
-    jobs = count_jobs(spark, "test:pagerank-jobs", lambda: G.q_pagerank(spark, sf_dir).collect())
+    jobs = measured(spark, lambda: G.q_pagerank(spark, sf_dir).collect())["jobs"]
     assert jobs <= _PAGERANK_JOBS_SF0001 + 2, jobs
 
 
@@ -621,7 +600,7 @@ def test_path_query_job_count_bounded(spark, sf_dir, query):
     """One call of each relax-backed query (plan build + collect) stays
     within two jobs of the probe-free count."""
     run = getattr(G, query)
-    jobs = count_jobs(spark, f"test:{query}-jobs", lambda: run(spark, sf_dir).collect())
+    jobs = measured(spark, lambda: run(spark, sf_dir).collect())["jobs"]
     assert jobs <= _PATH_JOBS_SF0001[query] + 2, jobs
 
 
@@ -703,7 +682,7 @@ _KCORE_PATH_JOBS = 21
 def test_label_prop_query_job_count_bounded(spark, sf_dir):
     """One q_label_prop call (plan build + collect) stays within two jobs
     of the probe-free count."""
-    jobs = count_jobs(spark, "test:lp-jobs", lambda: G.q_label_prop(spark, sf_dir).collect())
+    jobs = measured(spark, lambda: G.q_label_prop(spark, sf_dir).collect())["jobs"]
     assert jobs <= _LP_JOBS_SF0001 + 2, jobs
 
 
@@ -711,5 +690,5 @@ def test_kcore_job_count_bounded(spark):
     """A multi-round peel stays within two jobs of the probe-free count:
     each round's fixpoint probe costs no job of its own."""
     path = spark.createDataFrame([(100 + i, 101 + i) for i in range(6)], "u long, v long")
-    jobs = count_jobs(spark, "test:kcore-jobs", lambda: G.kcore(path, k=2, rounds=6).collect())
+    jobs = measured(spark, lambda: G.kcore(path, k=2, rounds=6).collect())["jobs"]
     assert jobs <= _KCORE_PATH_JOBS + 2, jobs

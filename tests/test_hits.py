@@ -5,6 +5,8 @@ import math
 from matrix_multiplication_bigdata_ind_assignments_spark.operators.hits import hits  # noqa: E402
 from matrix_multiplication_bigdata_ind_assignments_spark.operators.graph import trade_edges  # noqa: E402
 
+from conftest import measured
+
 
 def test_hits_hand_fixture(spark):
     """Bipartite star: supplier 2 feeds customers {1,3,5}; supplier 4
@@ -81,14 +83,6 @@ def test_hits_loop_shuffle_is_score_sized(spark, sf_dir):
     the contribution vectors or the |E|-row edge list lands far over
     it.  per[1] > 0 keeps the measurement-works canary (the setup
     exchanges still shuffle)."""
-    import pytest
-
-    from matrix_multiplication_bigdata_ind_assignments_spark.functions.metrics import (
-        ShuffleMetricsUnavailable,
-        measure_shuffle,
-    )
-    from matrix_multiplication_bigdata_ind_assignments_spark.operators.graph import trade_edges
-
     edges = trade_edges(spark, sf_dir)
     per = {}
     for iters in (1, 11):
@@ -97,10 +91,7 @@ def test_hits_loop_shuffle_is_score_sized(spark, sf_dir):
             hits(edges, iters=it).write.format("noop").mode("overwrite").save()
 
         run()  # warm
-        try:
-            per[iters] = measure_shuffle(spark, run)["shuffle_write_bytes"]
-        except ShuffleMetricsUnavailable as e:
-            pytest.skip(f"shuffle metrics unavailable on this Spark build: {e}")
+        per[iters] = measured(spark, run)["shuffle_write_bytes"]
     per_iter = (per[11] - per[1]) / 10
     assert per[1] > 0, per
     assert per_iter <= 0.2 * 29_118, per

@@ -14,7 +14,7 @@ from matrix_multiplication_bigdata_ind_assignments_spark.functions.loop import (
 )
 from matrix_multiplication_bigdata_ind_assignments_spark.operators import dedup as D
 
-from conftest import count_jobs
+from conftest import measured
 
 _PKG = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
@@ -28,9 +28,7 @@ def test_settle_counts_inside_the_checkpoint_job(spark):
     no shuffle settles in exactly one job."""
     df = spark.range(100)
     out = {}
-    jobs = count_jobs(
-        spark, "test:settle", lambda: out.update(r=settle(df, F.col("id") % 3 == 0))
-    )
+    jobs = measured(spark, lambda: out.update(r=settle(df, F.col("id") % 3 == 0)))["jobs"]
     frame, n = out["r"]
     assert jobs == 1
     assert n == 34
@@ -87,7 +85,5 @@ _STAR_JOBS_SF0001 = 25
 
 def test_star_query_job_count(spark, sf_dir):
     D.q_dedup_minhash(spark, sf_dir)  # memoizes the hot-bucket probe
-    jobs = count_jobs(
-        spark, "test:star-jobs", lambda: D.q_dedup_components_star(spark, sf_dir).collect()
-    )
+    jobs = measured(spark, lambda: D.q_dedup_components_star(spark, sf_dir).collect())["jobs"]
     assert jobs <= _STAR_JOBS_SF0001, jobs

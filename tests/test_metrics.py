@@ -17,20 +17,25 @@ Envelopes were recorded at sf0.001 on pyspark 4.1.2 with the session
 defaults (AQE on, 32 shuffle partitions).  The band is deliberately
 loose (0.4×–1.6×) so partition-count or minor version drift doesn't
 trip it, while a doubled exchange does.  On a Spark build where the
-UI-off AppStatusStore accessors have changed shape, the metrics module
-raises ShuffleMetricsUnavailable and these tests skip (they are a perf
-guard, not a correctness gate).
+AppStatusStore accessors have changed shape, ``metrics.measure`` raises
+ShuffleMetricsUnavailable and these tests skip (they are a perf guard,
+not a correctness gate).
+
+The window itself (``metrics.measure``) is pinned below: its job count,
+its byte totals over repeated windows, its cleanup on error, and the
+rule that nothing else in the repo sets a job group or reads the store.
 """
 
+import os
+import re
+
 import pytest
+from pyspark.sql import functions as F
 
 from matrix_multiplication_bigdata_ind_assignments_spark import registry
-from matrix_multiplication_bigdata_ind_assignments_spark.functions.metrics import (
-    ShuffleMetricsUnavailable,
-    measure_shuffle,
-    shuffle_delta,
-    shuffle_snapshot,
-)
+from matrix_multiplication_bigdata_ind_assignments_spark.functions.metrics import measure
+
+from conftest import measured
 
 # query → recorded steady-state shuffle_write_bytes at sf0.001 (read ==
 # write for every completed exchange; spill is zero at this scale).
@@ -82,13 +87,6 @@ def _noop(df):
     df.write.format("noop").mode("overwrite").save()
 
 
-def _measure_or_skip(spark, run):
-    try:
-        return measure_shuffle(spark, run)
-    except ShuffleMetricsUnavailable as e:
-        pytest.skip(f"shuffle metrics unavailable on this Spark build: {e}")
-
-
 def _assert_envelope(d, expected):
     lo, hi = 0.4 * expected, 1.6 * expected
     assert lo <= d["shuffle_write_bytes"] <= hi, d
@@ -106,7 +104,7 @@ def test_shuffle_envelope(spark, sf_dir, name):
         _noop(q(spark, sf_dir))
 
     run()  # warm: stat-probe memos populated, steady-state plan measured
-    _assert_envelope(_measure_or_skip(spark, run), _ENVELOPES[name])
+    _assert_envelope(measured(spark, run), _ENVELOPES[name])
 
 
 @pytest.fixture(scope="module")
@@ -154,38 +152,73 @@ def matmul_thunks(spark, sf_dir):
 def test_shuffle_envelope_matmul(spark, matmul_thunks, name):
     run = matmul_thunks[name]
     run()  # warm
-    _assert_envelope(_measure_or_skip(spark, run), _MATMUL_ENVELOPES[name])
+    _assert_envelope(measured(spark, run), _MATMUL_ENVELOPES[name])
 
 
-def test_snapshot_monotone_and_delta_clamped(spark):
-    """Snapshots are cumulative; deltas clamp at zero so pre-window stage
-    eviction can't produce negative charges.  Also pins the O(window)
-    contract: a snapshot taken `since` the current max stage id charges
-    only window-new stages."""
-    from matrix_multiplication_bigdata_ind_assignments_spark.functions.metrics import (
-        settled_snapshot,
-    )
+def test_measure_counts_one_job_and_no_shuffle(spark):
+    """A plain collect is one job and moves no shuffle bytes."""
+    m = measured(spark, lambda: spark.range(100).collect())
+    assert m["jobs"] == 1, m
+    assert m["shuffle_read_bytes"] == m["shuffle_write_bytes"] == 0, m
+    assert m["wall_s"] > 0, m
 
-    try:
-        s0 = settled_snapshot(spark)
-    except ShuffleMetricsUnavailable as e:
-        pytest.skip(f"shuffle metrics unavailable on this Spark build: {e}")
-    import pyspark.sql.functions as F
 
+def test_measure_back_to_back_windows_agree(spark):
+    """Two windows in a row over the same aggregation charge the same
+    bytes: the first window's late events do not leak into the second,
+    and neither window misses its own stages."""
     df = spark.range(10_000).withColumn("k", F.col("id") % 7).groupBy("k").count()
-    df.write.format("noop").mode("overwrite").save()
-    # settled on both edges (r8 review: raw snapshots race the async
-    # AppStatusListener bus — in-flight stage events could land between
-    # the s1 and win reads and flake the exact-equality asserts below)
-    s1 = settled_snapshot(spark)
-    d = shuffle_delta(s0, s1)
-    assert d["shuffle_write_bytes"] > 0
-    assert all(v >= 0 for v in d.values())
-    assert all(s1[k] >= s0[k] for k in s0)
-    # windowed form: since the pre-window max id, only the new stages count
-    win = shuffle_snapshot(spark, since_stage_id=s0["max_stage_id"])
-    assert win["shuffle_write_bytes"] == d["shuffle_write_bytes"]
-    assert win["max_stage_id"] == s1["max_stage_id"]
+
+    def run():
+        df.write.format("noop").mode("overwrite").save()
+
+    a, b = measured(spark, run), measured(spark, run)
+    assert a["shuffle_write_bytes"] == b["shuffle_write_bytes"] > 0, (a, b)
+    for m in (a, b):
+        assert m["shuffle_read_bytes"] >= 0.9 * m["shuffle_write_bytes"], m
+
+
+def test_measure_propagates_error_and_clears_job_group(spark):
+    """A raising thunk's error comes through unchanged, and the window's
+    job group is gone afterwards."""
+    sc = spark.sparkContext
+
+    def boom():
+        spark.range(10).collect()
+        raise RuntimeError("inside the window")
+
+    with pytest.raises(RuntimeError, match="inside the window"):
+        measure(spark, boom)
+    assert sc.getLocalProperty("spark.jobGroup.id") is None
+
+
+def test_only_metrics_module_touches_job_groups_and_the_store():
+    """``functions/metrics.py`` is the one module that sets a job group or
+    reads the status store, and the measurement helpers it replaced are
+    gone from the package, the tools, bench.py and the tests."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    pkg = "matrix_multiplication_bigdata_ind_assignments_spark"
+    files = [os.path.join(root, "bench.py")]
+    for top in (pkg, "tools", "tests"):
+        for d, _, names in os.walk(os.path.join(root, top)):
+            files += [os.path.join(d, n) for n in names if n.endswith(".py")]
+    metrics = os.path.join(root, pkg, "functions", "metrics.py")
+    store_api = re.compile(r"setJobGroup|getJobIdsForGroup|statusStore")
+    deleted = re.compile(
+        r"shuffle_snapshot|shuffle_delta|settled_snapshot|measure_shuffle"
+        r"|_FLOOR_CACHE|count_jobs|/stages"
+    )
+    hits = []
+    for path in files:
+        if path == os.path.abspath(__file__):
+            continue
+        with open(path) as f:
+            src = f.read()
+        found = set(deleted.findall(src))
+        if path != metrics:
+            found |= set(store_api.findall(src))
+        hits += [(os.path.relpath(path, root), name) for name in sorted(found)]
+    assert hits == []
 
 
 def test_explain_tool_rejects_sessions_without_jvm(spark):

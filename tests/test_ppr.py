@@ -6,7 +6,7 @@ import pytest
 from matrix_multiplication_bigdata_ind_assignments_spark.operators.graph import _decode_ranks, pagerank, trade_edges  # noqa: E402
 from matrix_multiplication_bigdata_ind_assignments_spark.operators.ppr import _SEED_MOD, q_trustrank  # noqa: E402
 
-from conftest import count_jobs, rows_set  # noqa: E402
+from conftest import measured, rows_set  # noqa: E402
 
 
 def test_uniform_seed_set_reproduces_pagerank(spark, sf_dir):
@@ -81,5 +81,5 @@ _TRUSTRANK_JOBS_SF0001 = 25
 def test_trustrank_query_job_count_bounded(spark, sf_dir):
     """One q_trustrank call (plan build + collect) stays within two jobs
     of q_pagerank's count: the seeded teleport adds no job."""
-    jobs = count_jobs(spark, "test:trustrank-jobs", lambda: q_trustrank(spark, sf_dir).collect())
+    jobs = measured(spark, lambda: q_trustrank(spark, sf_dir).collect())["jobs"]
     assert jobs <= _TRUSTRANK_JOBS_SF0001 + 2, jobs

@@ -154,6 +154,26 @@ def test_python_stream_source_rerunnable_and_exact(spark, sf_dir):
     assert a == b
 
 
+def test_oracle_check_runs_python_source_from_another_cwd(sf_dir, tmp_path):
+    """tools/oracle_check.py run from outside the repo root still passes
+    q_stream_python_source: the Python worker that unpickles the data
+    source finds the package through PYTHONPATH, which the tool sets
+    before its JVM starts."""
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env.update(SPARK_GRAFT_CPUS="2", MMBD_DRIVER_MEM="1g")
+    r = subprocess.run(
+        [sys.executable, os.path.join(root, "tools", "oracle_check.py"), sf_dir,
+         "q_stream_python_source"],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert r.returncode == 0, r.stdout[-2000:] + r.stderr[-2000:]
+
+
 def test_checkpoint_restart_exactly_once(spark, tmp_path):
     """Stop a checkpointed streaming query mid-stream and restart it: the
     parquet sink must hold each row exactly once — offsets resume from

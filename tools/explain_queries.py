@@ -8,8 +8,8 @@ it lists the registered queries.
 For the eager iterative operators (graph loops, Lloyd trainers) the
 RETURNED frame explains as a bare ExistingRDD scan — the interesting
 work happens in jobs launched while BUILDING it — so alongside the plan
-this records: number of Spark jobs launched, total tasks, and shuffle
-read/write MB around one full execution (noop sink), which is where a
+this records: number of Spark jobs launched and shuffle read/write and
+spill MB around one full execution (noop sink), which is where a
 job-count optimization (skipped certificate, early-stopped round) shows.
 
 Usage: python tools/explain_queries.py [--tag T [--suffix before]] [--sf DIR] q_a q_b ...
@@ -22,6 +22,9 @@ import sys
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
+# the Python workers import the package too: the JVM hands them its
+# environment, so ROOT goes on PYTHONPATH before any session starts
+os.environ["PYTHONPATH"] = os.pathsep.join(filter(None, [ROOT, os.environ.get("PYTHONPATH")]))
 
 
 def classic_context(spark):
@@ -69,17 +72,13 @@ def main() -> int:
     if not names:
         print("queries:", ", ".join(sorted(qs)))
         return 0
-    from matrix_multiplication_bigdata_ind_assignments_spark.functions.metrics import (
-        settled_snapshot,
-        shuffle_delta,
-    )
+    from matrix_multiplication_bigdata_ind_assignments_spark.functions.metrics import measure
     from matrix_multiplication_bigdata_ind_assignments_spark.session import get_spark
 
     spark = get_spark(
         "mmbd-explain",
         cpus=cpus,
         extra_conf={
-            "spark.ui.enabled": "true",
             "spark.ui.retainedStages": "40000",
             "spark.ui.retainedJobs": "40000",
         },
@@ -90,33 +89,26 @@ def main() -> int:
         outdir = os.path.join(ROOT, "plans", tag)
         os.makedirs(outdir, exist_ok=True)
 
-    tracker = sc.statusTracker()
-
     for name in names:
-        sc.setJobGroup(f"explain:{name}", name)
-        jobs0 = set(tracker.getJobIdsForGroup(f"explain:{name}"))
-        snap0 = settled_snapshot(spark)
-        df = qs[name](spark, sf_dir)  # building may itself run jobs (eager loops)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
-        df.write.format("noop").mode("overwrite").save()
-        d = shuffle_delta(snap0, settled_snapshot(spark))
-        jobs1 = set(tracker.getJobIdsForGroup(f"explain:{name}"))
-        # clearJobGroup is the supported clear API (ADVICE r12 —
-        # setJobGroup(None, None) relies on py4j accepting null ids);
-        # PySpark's SparkContext doesn't surface it, so call the
-        # JavaSparkContext method directly
-        sc._jsc.clearJobGroup()
+        plan = []
+
+        def run(name=name):
+            df = qs[name](spark, sf_dir)  # building may itself run jobs (eager loops)
+            plan.append(
+                df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
+            )
+            df.write.format("noop").mode("overwrite").save()
+
+        d = measure(spark, run)
         text = (
             f"# {name} — .explain('formatted') at sf_dir={sf_dir}\n"
             f"# executed evidence (one full run incl. building the frame):\n"
-            f"#   spark jobs launched: {len(jobs1 - jobs0)}\n"
+            f"#   spark jobs launched: {d['jobs']}\n"
             f"#   shuffle read MB: {d['shuffle_read_bytes'] / 1048576:.2f}"
             f"  write MB: {d['shuffle_write_bytes'] / 1048576:.2f}\n"
             f"#   spill mem MB: {d['spill_memory_bytes'] / 1048576:.2f}"
             f"  disk MB: {d['spill_disk_bytes'] / 1048576:.2f}\n"
-            f"{plan}\n"
+            f"{plan[0]}\n"
         )
         if not tag:
             print(text, flush=True)
@@ -124,7 +116,7 @@ def main() -> int:
         path = os.path.join(outdir, f"{name}_{suffix}.txt")
         with open(path, "w") as f:
             f.write(text)
-        print(f"wrote {path} (jobs={len(jobs1 - jobs0)}, "
+        print(f"wrote {path} (jobs={d['jobs']}, "
               f"shuffle_w={d['shuffle_write_bytes']/1048576:.1f}MB)", flush=True)
     return 0
 

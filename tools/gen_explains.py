@@ -13,6 +13,9 @@ from contextlib import redirect_stdout
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
+# the Python workers import the package too: the JVM hands them its
+# environment, so ROOT goes on PYTHONPATH before any session starts
+os.environ["PYTHONPATH"] = os.pathsep.join(filter(None, [ROOT, os.environ.get("PYTHONPATH")]))
 
 # query → the property the plan must exhibit (checked by tests/test_plans.py
 # where assertable; restated here so the audit doc is self-contained)

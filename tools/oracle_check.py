@@ -20,6 +20,9 @@ import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
+# the Python workers import the package too: the JVM hands them its
+# environment, so ROOT goes on PYTHONPATH before any session starts
+os.environ["PYTHONPATH"] = os.pathsep.join(filter(None, [ROOT, os.environ.get("PYTHONPATH")]))
 
 
 def normalize(rows, colnames):

@@ -5,8 +5,8 @@ fixture sf dir (tools/blowup.py) and print one SCALING.md row per run.
 Each row runs the whole query (building the frame, which runs the eager
 loops' jobs, plus a noop-sink write) once, after one untimed warm-up run
 of the same query on ``--sf``: output rows (an Observation on the write,
-no extra job), Spark jobs (by job group), shuffle-write MB
-(``functions/metrics.measure_shuffle``) and wall seconds.  ``bytes ×``
+no extra job), and Spark jobs, shuffle-write MB and wall seconds from
+one ``functions/metrics.measure`` window.  ``bytes ×``
 is the row's shuffle write over the query's row at the first k.
 
 ``--cores`` is the strong-scaling sweep instead: one fresh child process
@@ -34,6 +34,9 @@ import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
+# the Python workers import the package too: the JVM hands them its
+# environment, so ROOT goes on PYTHONPATH before any session starts
+os.environ["PYTHONPATH"] = os.pathsep.join(filter(None, [ROOT, os.environ.get("PYTHONPATH")]))
 
 import blowup  # noqa: E402
 
@@ -47,32 +50,18 @@ def probe_row(spark, name: str, sf_dir: str) -> dict:
     from pyspark.sql import functions as F
 
     from matrix_multiplication_bigdata_ind_assignments_spark import registry
-    from matrix_multiplication_bigdata_ind_assignments_spark.functions.metrics import (
-        measure_shuffle,
-    )
+    from matrix_multiplication_bigdata_ind_assignments_spark.functions.metrics import measure
 
     query = registry.queries()[name]
     obs = Observation(f"probe_{name}")
-    wall = {}
-
-    def run():
-        t0 = time.perf_counter()
-        _noop(query(spark, sf_dir).observe(obs, F.count(F.lit(1)).alias("rows")))
-        wall["s"] = time.perf_counter() - t0
-
-    sc = spark.sparkContext
-    group = f"probe:{name}:{sf_dir}"
-    sc.setJobGroup(group, group)
-    try:
-        shuffle = measure_shuffle(spark, run)
-        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-    finally:
-        sc._jsc.clearJobGroup()
+    m = measure(
+        spark, lambda: _noop(query(spark, sf_dir).observe(obs, F.count(F.lit(1)).alias("rows")))
+    )
     return {
         "rows": obs.get["rows"],
-        "jobs": jobs,
-        "shuffle_mb": shuffle["shuffle_write_bytes"] / 1048576,
-        "wall_s": wall["s"],
+        "jobs": m["jobs"],
+        "shuffle_mb": m["shuffle_write_bytes"] / 1048576,
+        "wall_s": m["wall_s"],
     }
 
 
@@ -80,12 +69,10 @@ def _sweep(args, names: list[str], ks: list[int]) -> None:
     from matrix_multiplication_bigdata_ind_assignments_spark import registry
     from matrix_multiplication_bigdata_ind_assignments_spark.session import get_spark
 
-    # UI on: one REST call per shuffle snapshot; every stage retained so
-    # no eviction lands inside a measurement window
+    # every stage retained so no eviction lands inside a measurement window
     spark = get_spark(
         "mmbd-probe",
         extra_conf={
-            "spark.ui.enabled": "true",
             "spark.ui.retainedStages": "40000",
             "spark.ui.retainedJobs": "40000",
         },
